@@ -1,4 +1,4 @@
-.PHONY: test dist bench validate scaling
+.PHONY: test dist bench perfbench validate scaling
 
 test:
 	python -m pytest tests/ -x -q
@@ -10,6 +10,12 @@ dist:
 
 bench:
 	python bench.py
+
+perfbench:
+	for w in extract_fresh extract_resume scan_backfill; do \
+		python3 perfbench/run.py --workload $$w --seed 1 --seconds 2 \
+			|| exit 1; \
+	done
 
 validate:
 	python tools/validate_contract.py

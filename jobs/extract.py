@@ -60,7 +60,6 @@ def main(argv=None):
     if args.incremental and not args.input:
         p.error("--incremental requires --input (a pages directory)")
 
-    from norsk_historisk_avis_ocr_spark.operators.extract import split_quarantine
     from norsk_historisk_avis_ocr_spark.operators.resume import run_with_resume
     from norsk_historisk_avis_ocr_spark.plans import build_session
     from norsk_historisk_avis_ocr_spark.sources import pages_df
@@ -86,12 +85,6 @@ def main(argv=None):
         else:
             pages = spark.read.parquet(args.input)
 
-        if args.quarantine:
-            good, bad = split_quarantine(pages)
-            if bad.limit(1).count():
-                bad.write.mode("append").parquet(args.quarantine)
-            pages = good
-
         out_path = args.output
         if args.engine:
             from norsk_historisk_avis_ocr_spark.plans.config import ENGINES
@@ -102,7 +95,7 @@ def main(argv=None):
             kwargs = {"normalize": not args.no_normalize}
         n = run_with_resume(
             spark, pages, out_path, lineage_path=args.lineage,
-            extract_kwargs=kwargs)
+            extract_kwargs=kwargs, quarantine_path=args.quarantine)
         print(f"committed {n} new documents to {out_path}")
     finally:
         if owns_session:  # never stop a session we merely joined

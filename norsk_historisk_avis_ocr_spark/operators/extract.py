@@ -35,17 +35,22 @@ from ..stages.normalize import default_normalizer
 MAX_HTML_BYTES = 16 * 1024 * 1024
 
 
-def split_quarantine(pages: DataFrame,
-                     max_bytes: int = MAX_HTML_BYTES) -> tuple[DataFrame, DataFrame]:
+def split_quarantine(pages: DataFrame, max_bytes: int = MAX_HTML_BYTES,
+                     observation=None) -> tuple[DataFrame, DataFrame]:
     """(good, quarantined). Quarantined rows keep url + reason for the
-    errors table (S5 in SURVEY.md §2.1)."""
+    errors table (S5 in SURVEY.md §2.1).
+
+    With an ``Observation``, the action that consumes ``good`` also counts
+    the quarantined rows as metric ``n_bad``, in the same scan."""
     reason = (
         F.when(F.col("html").isNull(), F.lit("null_html"))
         .when(F.length("html") > max_bytes, F.lit("oversized_html"))
     )
     with_reason = pages.withColumn("quarantine_reason", reason)
-    good = with_reason.filter(F.col("quarantine_reason").isNull()) \
-                      .drop("quarantine_reason")
+    tagged = with_reason if observation is None else with_reason.observe(
+        observation, F.count("quarantine_reason").alias("n_bad"))
+    good = tagged.filter(F.col("quarantine_reason").isNull()) \
+                 .drop("quarantine_reason")
     bad = with_reason.filter(F.col("quarantine_reason").isNotNull()) \
                      .select("url", "quarantine_reason")
     return good, bad

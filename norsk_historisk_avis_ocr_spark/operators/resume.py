@@ -14,7 +14,7 @@ from __future__ import annotations
 import time
 
 from pyspark.accumulators import AccumulatorParam
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -86,19 +86,6 @@ def lineage_rows_from_stats(spark: SparkSession, stats: dict) -> DataFrame:
         LINEAGE_SCHEMA)
 
 
-def partition_lineage(results: DataFrame) -> DataFrame:
-    """Per-partition lineage + metrics rows (north rule): one row per task
-    partition with url count, bytes in, and block totals — appended to the
-    lineage table at commit so a killed run can be audited and resumed."""
-    return results.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count("*").alias("n_urls"),
-        F.sum("metrics.html_bytes").alias("bytes_in"),
-        F.sum("metrics.n_blocks").alias("n_blocks"),
-        F.sum(F.when(F.col("metrics.has_masthead"), 1).otherwise(0))
-         .alias("n_mastheads"),
-    )
-
-
 def run_with_resume_bucketed(spark: SparkSession, pages_table: str,
                              results_table: str, n_buckets: int = 64,
                              extract_kwargs: dict | None = None) -> int:
@@ -137,7 +124,8 @@ def run_with_resume_bucketed(spark: SparkSession, pages_table: str,
 def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
                     lineage_path: str | None = None,
                     extract_kwargs: dict | None = None,
-                    transform=None, key_col: str = "url") -> int:
+                    transform=None, key_col: str = "url",
+                    quarantine_path: str | None = None) -> int:
     """One resumable batch: anti-join done keys, process, commit, lineage.
 
     ``transform`` is the batch pipeline (DataFrame → DataFrame); the
@@ -149,7 +137,9 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
 
     Returns the number of newly committed rows. Idempotent: re-running after
     a kill processes only un-committed keys (parquet job commits are atomic;
-    with Iceberg this is a snapshot append).
+    with Iceberg this is a snapshot append). Before the first commit there
+    is nothing to anti-join against, so the join is skipped and the batch
+    streams from its input splits straight into the UDF, with no shuffle.
 
     Commit-stats lineage: the per-partition counts/bytes/blocks ride a dict
     accumulator on the write pass itself (``with_lineage_stats``), so the
@@ -158,14 +148,28 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
     lineage rows (one per task partition, tiny) are created driver-side
     from the accumulator AFTER the commit succeeds, so a killed run never
     records lineage for an uncommitted batch.
-    """
-    from ..sources.sinks import read_done_urls, write_lineage, write_results
 
-    done = read_done_urls(spark, out_path, key_col=key_col)
-    todo = resume_filter(pages, done, key_col=key_col)
+    Quarantine (default html path only): the rows ``split_quarantine``
+    rejects are counted by an ``Observation`` on the same write pass, and
+    only a non-zero count triggers their append to ``quarantine_path``
+    after the commit. Rejected rows are never committed, so every resumed
+    run meets them again; they are anti-joined against the urls already
+    quarantined, which keeps each one there exactly once.
+    """
+    from ..sources.sinks import (
+        has_committed, read_done_urls, write_lineage, write_results,
+    )
+
+    if transform is not None and quarantine_path:
+        raise ValueError("quarantine_path applies to the default html "
+                         "path; a transform quarantines in-row")
+    todo = resume_filter(pages, read_done_urls(spark, out_path, key_col),
+                         key_col=key_col) \
+        if has_committed(out_path) else pages
+    observed = Observation("quarantine") if quarantine_path else None
     if transform is None:
         from .extract import extract_pages, split_quarantine
-        good, bad = split_quarantine(todo)
+        good, bad = split_quarantine(todo, observation=observed)
         results = extract_pages(good, **(extract_kwargs or {}))
     else:
         results = transform(todo)
@@ -177,4 +181,8 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
         lineage = lineage_rows_from_stats(spark, stats) \
             .withColumn("committed_at", F.lit(int(time.time())))
         write_lineage(lineage, lineage_path)
+    if observed is not None and observed.get["n_bad"]:
+        if has_committed(quarantine_path):
+            bad = resume_filter(bad, read_done_urls(spark, quarantine_path))
+        bad.write.mode("append").parquet(quarantine_path)
     return n

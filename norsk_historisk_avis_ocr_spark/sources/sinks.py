@@ -32,14 +32,19 @@ def write_results(df: DataFrame, path: str, mode: str = "append") -> None:
     if _iceberg_available(spark):  # pragma: no cover - not present in sandbox
         df.writeTo(path).append()
         return
-    df.write.mode(mode).parquet(path)
+    df.write.mode(mode).option("compression", "zstd").parquet(path)
+
+
+def has_committed(path: str) -> bool:
+    """True once a commit has landed a parquet file under ``path``."""
+    return os.path.isdir(path) and any(
+        f.endswith(".parquet") for f in os.listdir(path))
 
 
 def read_done_urls(spark: SparkSession, path: str,
                    key_col: str = "url") -> DataFrame:
     """Keys already committed to the results sink (empty if first run)."""
-    if os.path.isdir(path) and any(
-            f.endswith(".parquet") for f in os.listdir(path)):
+    if has_committed(path):
         return spark.read.parquet(path).select(key_col)
     return spark.createDataFrame([], f"{key_col} string")
 
@@ -61,6 +66,7 @@ def write_bucketed(df: DataFrame, table: str, bucket_col: str = "url",
 
 def write_lineage(metrics_df: DataFrame, path: str) -> None:
     """Per-partition lineage + extraction metrics (north rule): one row per
-    task partition with counts/bytes/elapsed, appended alongside results."""
-    metrics_df.withColumn("committed", F.lit(True)) \
-        .write.mode("append").parquet(path)
+    task partition with counts/bytes/elapsed, appended alongside results
+    as one file per pass."""
+    metrics_df.withColumn("committed", F.lit(True)).coalesce(1) \
+        .write.mode("append").option("compression", "zstd").parquet(path)

@@ -3,6 +3,7 @@ arms, xref/object-graph correctness, largest-image selection, and the
 loud-failure quarantine contract (the reference's primary input format,
 ``ocr.py:25``; poppler decode at ``engines/tesseract_engine.py:133-142``)."""
 
+import os
 import zlib
 
 import numpy as np
@@ -282,6 +283,8 @@ def test_segment_scans_job_resumes(spark, tmp_path):
         {f"page-{i}" for i in range(12)}
     lineage = spark.read.parquet(lin)
     assert lineage.agg({"n_urls": "sum"}).first()[0] == 12
+    # one lineage file per committing pass (the re-run committed nothing)
+    assert len([f for f in os.listdir(lin) if f.endswith(".parquet")]) == 1
 
 
 def _splice_image_dict(pdf: bytes, extra: bytes) -> bytes:

@@ -86,11 +86,15 @@ def test_run_with_resume_idempotent(spark, sf_dir, tmp_path):
     from norsk_historisk_avis_ocr_spark.operators.resume import run_with_resume
     out = os.path.join(str(tmp_path), "results")
     lineage = os.path.join(str(tmp_path), "lineage")
+    quarantine = os.path.join(str(tmp_path), "quarantine")
     pages = pages_df(spark, sf_dir).limit(25).cache()
-    n1 = run_with_resume(spark, pages, out, lineage_path=lineage)
+    n1 = run_with_resume(spark, pages, out, lineage_path=lineage,
+                         quarantine_path=quarantine)
     assert n1 == 25
-    n2 = run_with_resume(spark, pages, out, lineage_path=lineage)
+    n2 = run_with_resume(spark, pages, out, lineage_path=lineage,
+                         quarantine_path=quarantine)
     assert n2 == 0  # everything committed → nothing reprocessed
+    assert not os.path.exists(quarantine)  # no bad row, no quarantine write
     assert spark.read.parquet(out).select("url").distinct().count() == 25
     lin = spark.read.parquet(lineage)
     assert lin.agg(F.sum("n_urls")).first()[0] == 25

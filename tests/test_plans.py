@@ -68,6 +68,38 @@ def test_resume_antijoin_single_join(spark, pages_parquet):
     assert "BroadcastHashJoin" in plan
 
 
+def _write_plans(spark, path):
+    """Final physical plans of this session's SQL executions that wrote
+    ``path``, oldest first."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [execs.apply(i).physicalPlanDescription()
+             for i in range(execs.size())]
+    return [p for p in plans if f"Arguments: file:{path}, " in p]
+
+
+def test_resume_joins_only_once_committed(spark, sf_dir, tmp_path):
+    """Before the first commit the anti-join is skipped, so the fresh
+    write plan streams input splits into the UDF with no Join and no
+    Exchange, and keeps the lineage MapInPandas above the extraction one;
+    a resumed pass keeps the LeftAnti join."""
+    from norsk_historisk_avis_ocr_spark.operators.resume import (
+        run_with_resume,
+    )
+    from norsk_historisk_avis_ocr_spark.sources import pages_df
+    first, more = str(tmp_path / "first"), str(tmp_path / "more")
+    pages_df(spark, sf_dir).limit(12).write.parquet(first)
+    pages_df(spark, sf_dir).limit(20).write.parquet(more)
+    out = str(tmp_path / "results")
+    assert run_with_resume(spark, spark.read.parquet(first), out) == 12
+    fresh, = _write_plans(spark, out)
+    assert "Join" not in fresh and "Exchange" not in fresh, fresh
+    tree = fresh.split("\n\n")[0]
+    assert tree.count("MapInPandas") == 2, tree
+    assert run_with_resume(spark, spark.read.parquet(more), out) == 8
+    resumed = _write_plans(spark, out)[1]
+    assert "LeftAnti" in resumed, resumed
+
+
 def test_window_ops_single_exchange(spark):
     df = spark.createDataFrame(
         [(1, "a", i) for i in range(5)],
