@@ -213,13 +213,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the operator itself is map-only."""
         _ensure_worker_path(spark)
         from norsk_historisk_avis_ocr_spark.operators.raster import (
-            segment_png_pages,
+            segment_image_pages,
         )
         from norsk_historisk_avis_ocr_spark.sources.rasters import (
             raster_pages_df,
         )
         pages = raster_pages_df(spark, sf, limit=80, partitions=8)
-        geo = segment_png_pages(pages)
+        geo = segment_image_pages(pages)
         def _n(col):  # size(NULL) is -1 by default — keep NULLs NULL
             return F.when(F.col(col).isNull(), F.lit(None)) \
                 .otherwise(F.size(col)).cast("long")
@@ -270,7 +270,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def raster_verified(spark, sf):
         """Self-verifying contract row for the raster L1-L4 pipeline: run
-        the REAL ``segment_png_pages`` path (PNG decode → grayscale →
+        the REAL ``segment_image_pages`` path (PNG decode → grayscale →
         geometry), then — inside the UDF — re-synthesize each page
         (deterministic generator) and execute the *reference's*
         ``_split_columns`` (``refexec.golden_geometry``) to compare title
@@ -278,13 +278,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         constant oracle: geometry drift becomes a driver-gate FAIL."""
         _ensure_worker_path(spark)
         from norsk_historisk_avis_ocr_spark.operators.raster import (
-            segment_png_pages,
+            segment_image_pages,
         )
         from norsk_historisk_avis_ocr_spark.sources.rasters import (
             raster_pages_df,
         )
         pages = raster_pages_df(spark, sf, limit=40, partitions=8)
-        geo = segment_png_pages(pages)
+        geo = segment_image_pages(pages)
 
         def vfn(batches):
             import pandas as pd

@@ -128,7 +128,7 @@ def main():
         # reference's native input class). Page synthesis is untimed for
         # the same reason the html pages table is pre-materialized.
         from norsk_historisk_avis_ocr_spark.operators.raster import (
-            segment_png_pages,
+            segment_image_pages,
         )
         from norsk_historisk_avis_ocr_spark.sources.rasters import (
             raster_pages_df,
@@ -138,7 +138,7 @@ def main():
             .write.parquet(raster_path)
         rasters = spark.read.parquet(raster_path)
         n_pages = rasters.count()
-        seg = segment_png_pages(rasters)
+        seg = segment_image_pages(rasters)
         _noop(seg)  # warm
         seg_times = []
         for _ in range(2):
@@ -162,7 +162,7 @@ def main():
                       arms=("gray", "color")).write.parquet(jpeg_path)
         jpegs = spark.read.parquet(jpeg_path)
         n_jpegs = jpegs.count()
-        jseg = segment_png_pages(jpegs)
+        jseg = segment_image_pages(jpegs)
         _noop(jseg)  # warm
         jseg_times = []
         for _ in range(2):
@@ -183,7 +183,7 @@ def main():
                      partitions=cpus).write.parquet(pdf_path)
         pdfs = spark.read.parquet(pdf_path)
         n_pdfs = pdfs.count()
-        pseg = segment_png_pages(pdfs)
+        pseg = segment_image_pages(pdfs)
         _noop(pseg)  # warm
         pseg_times = []
         for _ in range(2):

@@ -12,8 +12,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .textqual import portable_hash60, tokens
-
 # MinHash family: h_i(x) = (A_i * H(x) + B_i) mod P over the 60-bit portable
 # hash. P is a large prime below 2^61 so products stay in signed-64 range
 # only if we mod A_i*H first — instead compute in two mod steps.
@@ -39,20 +37,3 @@ def word_shingles_of(toks: Column, k: int = 3) -> Column:
             F.sequence(F.lit(0), n - k),
             lambda i: F.concat_ws(
                 " ", F.slice(toks, i + 1, k))))
-
-
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """k-word shingles (space-joined) of a text column; empty text → []."""
-    return word_shingles_of(tokens(col), k)
-
-
-def minhash_value(hash_col: Column, i: int) -> Column:
-    """One permutation value. Small multipliers keep A*H < 2^63 for
-    H < 2^60 - computed identically in the SQL oracle."""
-    return (hash_col * F.lit(MINHASH_A[i]) + F.lit(MINHASH_B[i])) % F.lit(MINHASH_PRIME)
-
-
-def simhash_bit_weight(hash_col: Column, bit: int) -> Column:
-    """+1 / −1 contribution of a token hash to one SimHash bit plane."""
-    return F.when(F.shiftright(hash_col, bit).bitwiseAND(F.lit(1)) == 1,
-                  F.lit(1)).otherwise(F.lit(-1))

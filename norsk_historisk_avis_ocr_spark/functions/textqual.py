@@ -59,14 +59,6 @@ def bpe_ish_token_count(col: Column) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(pattern), F.lit(0)))
 
 
-def stopword_ratio(col: Column, lang: str) -> Column:
-    """Fraction of whitespace tokens that are stopwords of ``lang``."""
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    toks = tokens(F.lower(col))
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
 def quality_score(col: Column) -> Column:
     """Composite document quality in [0, 1]: length score × alpha ratio ×
     (1 − punctuation excess). Deterministic, SQL-expressible."""

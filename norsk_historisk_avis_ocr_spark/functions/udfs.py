@@ -146,8 +146,7 @@ def projected_schema(output_columns: list[str] | None) -> StructType:
 
 def extract_map_fn(normalize_table: tuple[dict, set] | None,
                    output_columns: list[str] | None = None,
-                   normalize_langs: set[str] | None = None,
-                   lang_tables: dict[str, tuple[dict, set]] | None = None):
+                   normalize_langs: set[str] | None = None):
     """Build the ``mapInPandas`` function. ``normalize_table`` is the
     broadcast-safe plain-dict form of the trie (rebuilt once per executor —
     the J3 broadcast-lookup pattern).
@@ -158,10 +157,8 @@ def extract_map_fn(normalize_table: tuple[dict, set] | None,
     Arrow payload and skips work — e.g. without ``correction_changes`` the
     quadratic word diff never runs.
 
-    ``lang_tables`` selects a *different* orthography table per language
-    code (per-language tries, each built once per executor); rows whose
-    language has no table are not normalized (X5 coalesce). Overrides
-    ``normalize_table``/``normalize_langs``.
+    ``normalize_langs`` normalizes only the rows whose ``lang`` is in the
+    set; the batch must then carry a ``lang`` column.
     """
     fields = [f.name for f in projected_schema(output_columns).fields]
     need_diff = "correction_changes" in fields
@@ -169,37 +166,26 @@ def extract_map_fn(normalize_table: tuple[dict, set] | None,
 
     def fn(batches):
         import pandas as pd
-        if lang_tables is not None:
-            per_lang = {lg: OrthographyNormalizer(t[0], t[1])
-                        for lg, t in lang_tables.items()}
-            pick = per_lang.get
-        else:
-            normalizer = (OrthographyNormalizer(normalize_table[0],
-                                                normalize_table[1])
-                          if normalize_table is not None else None)
-            if normalize_langs is not None:
-                def pick(lg):
-                    return normalizer if lg in normalize_langs else None
-            else:
-                def pick(lg):
-                    return normalizer
-        by_lang = lang_tables is not None or normalize_langs is not None
+        normalizer = (OrthographyNormalizer(normalize_table[0],
+                                            normalize_table[1])
+                      if normalize_table is not None else None)
         for pdf in batches:
-            if by_lang and "lang" not in pdf:
-                # loud, not silent: per-language gating was requested but
-                # the batch carries no language (mirrors extract_pages's
-                # driver-side ValueError for direct extract_map_fn callers)
-                raise ValueError(
-                    "normalize_langs/lang_tables given but batch has no "
-                    "'lang' column")
-            if by_lang:
-                rows = [extract_one(u, h, pick(lg), with_diff=need_diff,
-                                    wants=wants)
+            if normalize_langs is not None:
+                if "lang" not in pdf:
+                    # loud, not silent: per-language gating was requested
+                    # but the batch carries no language (mirrors
+                    # the ValueError extract_pages raises before planning)
+                    raise ValueError(
+                        "normalize_langs given but batch has no 'lang' "
+                        "column")
+                rows = [extract_one(u, h, normalizer
+                                    if lg in normalize_langs else None,
+                                    with_diff=need_diff, wants=wants)
                         for u, h, lg in zip(pdf["url"].tolist(),
                                             pdf["html"].tolist(),
                                             pdf["lang"].tolist())]
             else:
-                rows = [extract_one(u, h, pick(None), with_diff=need_diff,
+                rows = [extract_one(u, h, normalizer, with_diff=need_diff,
                                     wants=wants)
                         for u, h in zip(pdf["url"].tolist(),
                                         pdf["html"].tolist())]

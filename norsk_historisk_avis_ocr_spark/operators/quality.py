@@ -39,13 +39,11 @@ def quality_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-def _lang_hit_cols(text_col=None) -> list:
-    """Per-language marker-hit columns (each evaluated once in its own
-    projection — the two-step select keeps the array scans out of the
-    winner expressions). ``text_col`` defaults to the ``text`` column;
-    pass another column to classify e.g. extracted ``transcribed`` text."""
-    toks = tokens(F.lower(text_col if text_col is not None
-                          else F.col("text")))
+def _lang_hit_cols() -> list:
+    """Per-language marker-hit columns of the ``text`` column (each
+    evaluated once in its own projection — the two-step select keeps the
+    array scans out of the winner expressions)."""
+    toks = tokens(F.lower(F.col("text")))
 
     def _hits(lang):
         sw = F.array(*[F.lit(x) for x in STOPWORDS[lang]])

@@ -1,18 +1,19 @@
 """Raster layout segmentation as a DataFrame operator (L1-L4 on Spark).
 
 The geometry library (``stages/layout.py``) is pure numpy; this wires it to
-DataFrames for corpora where the page payload is a raster (scanned
-newspapers — the reference's native input) rather than HTML. Pages are
-carried as raw grayscale bytes + dimensions (the decoded-raster analog of
-the reference's PIL image; PNG/JPEG decode would slot into the same UDF if
-an image codec were available — the container has none, so raw grayscale is
-the supported interchange format and is exactly what ``numpy.frombuffer``
-needs).
+DataFrames for corpora whose page payload is an encoded scan rather than
+HTML — the reference's native input. The in-tree codecs (``stages/png.py``,
+``stages/jpeg.py``, ``stages/tiff.py``, ``stages/pdf.py``) decode the
+payload inside the UDF, picked by its magic bytes, so only compressed bytes
+cross the Arrow boundary in and the small geometry struct out.
 
 Output is the ``blocks`` struct-array row the SURVEY data model specifies:
 one row per page with boundaries, per-column body tops, the title box, and
 column crop boxes — the contents of the reference's ``detection_info.txt``
 (``engines/_columns.py:383-418``) as queryable columns (S8 debug sink).
+Two operators produce it: :func:`segment_image_pages` (one payload = one
+page) and :func:`segment_issues` (one multi-page PDF or TIFF issue = one
+row per page).
 """
 
 from __future__ import annotations
@@ -22,6 +23,8 @@ from pyspark.sql.types import (
     ArrayType, BinaryType, IntegerType, LongType, StringType, StructField,
     StructType,
 )
+
+from ..stages.layout import split_columns_geometry
 
 BOX_TYPE = StructType([
     StructField("x0", IntegerType(), False),
@@ -38,45 +41,56 @@ LAYOUT_SCHEMA = StructType([
     StructField("column_boxes", ArrayType(BOX_TYPE), False),
 ])
 
+# the geometry columns as the operators emit them: null on a quarantine row,
+# which carries the error instead
+_GEOMETRY_FIELDS = (
+    [StructField(f.name, f.dataType, True) for f in LAYOUT_SCHEMA[1:]]
+    + [StructField("decode_error", StringType(), True)])
 
-def segment_rasters(df: DataFrame, id_col: str = "page_id",
-                    bytes_col: str = "gray", width_col: str = "width",
-                    height_col: str = "height") -> DataFrame:
-    """Grayscale page rasters → layout geometry rows.
 
-    Input columns: ``id_col`` (string key), ``bytes_col`` (H*W uint8 raw
-    grayscale), ``width_col``/``height_col``. One vectorized stage — each
-    page segments independently (map-only, no shuffle).
-    """
-    def fn(batches):
-        import numpy as np
-        import pandas as pd
+def _box(t):
+    if t is None:
+        return None
+    return {"x0": int(t[0]), "y0": int(t[1]), "x1": int(t[2]), "y1": int(t[3])}
 
-        from ..stages.layout import split_columns_geometry
 
-        def box(t):
-            if t is None:
-                return None
-            return {"x0": int(t[0]), "y0": int(t[1]),
-                    "x1": int(t[2]), "y1": int(t[3])}
+def _quarantine_row(exc: Exception) -> dict:
+    return {"boundaries": None, "body_top": None, "title_box": None,
+            "column_boxes": None,
+            "decode_error": f"{type(exc).__name__}: {exc}"}
 
-        for pdf in batches:
-            rows = []
-            for pid, data, w, h in zip(pdf[id_col], pdf[bytes_col],
-                                       pdf[width_col], pdf[height_col]):
-                img = np.frombuffer(bytes(data), dtype=np.uint8) \
-                    .reshape(int(h), int(w))
-                geo = split_columns_geometry(img)
-                rows.append({
-                    "page_id": pid,
-                    "boundaries": [int(x) for x in geo["boundaries"]],
-                    "body_top": [int(x) for x in geo["body_top"]],
-                    "title_box": box(geo["title_box"]),
-                    "column_boxes": [box(b) for b in geo["column_boxes"]],
-                })
-            yield pd.DataFrame(rows)
 
-    return df.mapInPandas(fn, schema=LAYOUT_SCHEMA)
+def _page_row(decode, debug_overlay: bool = False) -> dict:
+    """The geometry columns of one page: ``decode()`` → (H, W) uint8 →
+    L1-L4 geometry, or a quarantine row carrying the error when decoding
+    or segmentation raises (the task never fails on one page)."""
+    try:
+        gray = decode()
+        geo = split_columns_geometry(gray)
+        row = {"boundaries": [int(x) for x in geo["boundaries"]],
+               "body_top": [int(x) for x in geo["body_top"]],
+               "title_box": _box(geo["title_box"]),
+               "column_boxes": [_box(b) for b in geo["column_boxes"]],
+               "decode_error": None}
+        if debug_overlay:
+            row["debug_png"] = render_debug_overlay(gray, geo)
+    except Exception as exc:  # noqa: BLE001 - quarantine row
+        row = _quarantine_row(exc)
+        if debug_overlay:
+            row["debug_png"] = None
+    return row
+
+
+def _sniff(data: bytes) -> str:
+    """The codec of an encoded payload by its magic bytes: ``jpeg``,
+    ``tiff``, ``pdf``, or ``png`` for anything else."""
+    if data.startswith(b"\xff\xd8\xff"):
+        return "jpeg"
+    if data.startswith((b"II*\x00", b"MM\x00*")):
+        return "tiff"
+    if data.startswith(b"%PDF-"):
+        return "pdf"
+    return "png"
 
 
 def decode_payload_gray(data: bytes):
@@ -90,11 +104,12 @@ def decode_payload_gray(data: bytes):
     from ..stages.png import decode_png, to_grayscale
     from ..stages.tiff import decode_tiff_gray
 
-    if data.startswith(b"\xff\xd8\xff"):
+    codec = _sniff(data)
+    if codec == "jpeg":
         return decode_jpeg_gray(data)
-    if data.startswith(b"II*\x00") or data.startswith(b"MM\x00*"):
+    if codec == "tiff":
         return decode_tiff_gray(data)
-    if data.startswith(b"%PDF-"):
+    if codec == "pdf":
         return decode_pdf_page_image(data)
     return to_grayscale(decode_png(data))
 
@@ -144,17 +159,17 @@ def render_debug_overlay(gray, geo) -> bytes:
 def segment_image_pages(df: DataFrame, id_col: str = "page_id",
                         png_col: str = "png",
                         debug_overlay: bool = False) -> DataFrame:
-    """Encoded page payloads (PNG, baseline JPEG, or baseline TIFF —
-    dispatched on magic bytes) → layout geometry rows (the reference's
+    """Encoded page payloads (PNG, baseline/progressive JPEG, TIFF, or a
+    scan PDF's first page — dispatched on magic bytes by
+    :func:`decode_payload_gray`) → layout geometry rows (the reference's
     input class: encoded raster in, geometry out,
     ``tesseract_engine.py:143-144``).
 
-    Decode (``stages/png.py`` / ``stages/jpeg.py`` / ``stages/tiff.py``
-    via :func:`decode_payload_gray`), grayscale conversion, and L1-L4
-    segmentation are fused into one Arrow-batched stage — raw pixels never
-    cross an Arrow boundary, only the compressed payload in and the small
-    geometry struct out. Map-only, no shuffle; undecodable payloads yield
-    a null geometry row (quarantine semantics) instead of failing the task.
+    Decode, grayscale conversion, and L1-L4 segmentation are fused into one
+    Arrow-batched stage — raw pixels never cross an Arrow boundary, only
+    the compressed payload in and the small geometry struct out. Map-only,
+    no shuffle; undecodable payloads yield a null geometry row with
+    ``decode_error`` set (quarantine semantics) instead of failing the task.
 
     ``debug_overlay=True`` adds a ``debug_png`` binary column: the page
     re-encoded with boundary/title/column/body-top annotations drawn in
@@ -163,184 +178,69 @@ def segment_image_pages(df: DataFrame, id_col: str = "page_id",
     production scans.
     """
     schema = StructType(
-        [LAYOUT_SCHEMA[0]]
-        + [StructField(f.name, f.dataType, True) for f in LAYOUT_SCHEMA[1:]]
-        + [StructField("decode_error", StringType(), True)]
+        [LAYOUT_SCHEMA[0]] + _GEOMETRY_FIELDS
         + ([StructField("debug_png", BinaryType(), True)]
            if debug_overlay else []))
 
     def fn(batches):
         import pandas as pd
 
-        from ..stages.layout import split_columns_geometry
-        decode_gray = decode_payload_gray
-
-        def box(t):
-            if t is None:
-                return None
-            return {"x0": int(t[0]), "y0": int(t[1]),
-                    "x1": int(t[2]), "y1": int(t[3])}
-
         for pdf in batches:
-            rows = []
-            for pid, data in zip(pdf[id_col], pdf[png_col]):
-                try:
-                    gray = decode_gray(bytes(data))
-                    geo = split_columns_geometry(gray)
-                    row = {
-                        "page_id": pid,
-                        "boundaries": [int(x) for x in geo["boundaries"]],
-                        "body_top": [int(x) for x in geo["body_top"]],
-                        "title_box": box(geo["title_box"]),
-                        "column_boxes": [box(b) for b in geo["column_boxes"]],
-                        "decode_error": None,
-                    }
-                    if debug_overlay:
-                        row["debug_png"] = render_debug_overlay(gray, geo)
-                    rows.append(row)
-                except Exception as exc:  # noqa: BLE001 - quarantine row
-                    row = {
-                        "page_id": pid, "boundaries": None, "body_top": None,
-                        "title_box": None, "column_boxes": None,
-                        "decode_error": f"{type(exc).__name__}: {exc}",
-                    }
-                    if debug_overlay:
-                        row["debug_png"] = None
-                    rows.append(row)
-            yield pd.DataFrame(rows)
+            yield pd.DataFrame([
+                {"page_id": pid,
+                 **_page_row(lambda: decode_payload_gray(bytes(data)),
+                             debug_overlay)}
+                for pid, data in zip(pdf[id_col], pdf[png_col])])
 
     return df.mapInPandas(fn, schema=schema)
 
 
-# Historical name (round 2): the operator now also decodes baseline JPEG.
-segment_png_pages = segment_image_pages
+def _issue_pages(data: bytes) -> list:
+    """One decoder per page of a multi-page scan issue, the codec picked
+    by magic bytes: PDF (:func:`stages.pdf.pdf_pages`) or multi-IFD TIFF
+    (:func:`stages.tiff.tiff_pages`). Raises ``ValueError`` when the
+    container is malformed or is neither."""
+    from ..stages.pdf import pdf_pages
+    from ..stages.tiff import tiff_pages
+
+    codec = _sniff(data)
+    if codec == "pdf":
+        return pdf_pages(data)
+    if codec == "tiff":
+        return tiff_pages(data)
+    raise ValueError("issue payload is neither a PDF nor a TIFF")
 
 
-def segment_pdf_issues(df: DataFrame, id_col: str = "issue_id",
-                       pdf_col: str = "pdf") -> DataFrame:
-    """Multi-page scan PDFs → one layout-geometry row per page
-    (1→N expansion): the reference's issue shape — ``ocr.py`` hands each
-    PDF to the engine, which rasterizes and processes EVERY page
+def segment_issues(df: DataFrame, id_col: str = "issue_id",
+                   payload_col: str = "payload") -> DataFrame:
+    """Multi-page scan issues (PDF or multi-IFD TIFF, see
+    :func:`_issue_pages`) → one layout-geometry row per page (1→N
+    expansion): the reference's issue shape — ``ocr.py`` hands each file
+    to the engine, which rasterizes and processes EVERY page
     (``engines/tesseract_engine.py:133-142`` iterates poppler's per-page
-    output). Decode (``stages/pdf.py``, lazily per page) + L1-L4
-    segmentation fused in one Arrow-batched stage; a malformed issue
-    yields a single quarantine row (page_index -1) instead of failing
-    the task, and a single bad page quarantines only that page."""
+    output). Pages are decoded lazily, one at a time, and segmented in the
+    same Arrow-batched stage. A malformed issue yields a single quarantine
+    row (``page_index`` -1) instead of failing the task, and a page that
+    cannot be decoded quarantines only that page."""
     schema = StructType(
         [StructField("issue_id", StringType(), True),
-         StructField("page_index", LongType(), True)]
-        + [StructField(f.name, f.dataType, True) for f in LAYOUT_SCHEMA[1:]]
-        + [StructField("decode_error", StringType(), True)])
+         StructField("page_index", LongType(), True)] + _GEOMETRY_FIELDS)
 
     def fn(batches):
         import pandas as pd
 
-        from ..stages.layout import split_columns_geometry
-        from ..stages.pdf import _Doc, _decode_largest, _walk_pages
-
-        def box(t):
-            if t is None:
-                return None
-            return {"x0": int(t[0]), "y0": int(t[1]),
-                    "x1": int(t[2]), "y1": int(t[3])}
-
-        def quarantine(iid, page_idx, exc):
-            return {"issue_id": iid, "page_index": page_idx,
-                    "boundaries": None, "body_top": None,
-                    "title_box": None, "column_boxes": None,
-                    "decode_error": f"{type(exc).__name__}: {exc}"}
-
         for pdf in batches:
             rows = []
-            for iid, data in zip(pdf[id_col], pdf[pdf_col]):
+            for iid, data in zip(pdf[id_col], pdf[payload_col]):
                 try:
-                    doc = _Doc(bytes(data))
-                    pages = _walk_pages(doc)
+                    pages = _issue_pages(bytes(data))
                 except Exception as exc:  # noqa: BLE001 - quarantine issue
-                    rows.append(quarantine(iid, -1, exc))
+                    rows.append({"issue_id": iid, "page_index": -1,
+                                 **_quarantine_row(exc)})
                     continue
-                for idx, (page, resources) in enumerate(pages):
-                    try:
-                        gray = _decode_largest(doc, page, resources)
-                        geo = split_columns_geometry(gray)
-                        rows.append({
-                            "issue_id": iid, "page_index": idx,
-                            "boundaries": [int(x)
-                                           for x in geo["boundaries"]],
-                            "body_top": [int(x) for x in geo["body_top"]],
-                            "title_box": box(geo["title_box"]),
-                            "column_boxes": [box(b)
-                                             for b in geo["column_boxes"]],
-                            "decode_error": None,
-                        })
-                    except Exception as exc:  # noqa: BLE001 - per page
-                        rows.append(quarantine(iid, idx, exc))
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(fn, schema=schema)
-
-
-def segment_tiff_issues(df: DataFrame, id_col: str = "issue_id",
-                        tiff_col: str = "tiff") -> DataFrame:
-    """Multi-page (chained-IFD) TIFF issues → one layout-geometry row
-    per page — the TIFF analog of :func:`segment_pdf_issues` (archives
-    commonly ship a scanned issue as one multi-IFD TIFF; the reference's
-    PIL path iterates frames the same way). Same quarantine contract:
-    a malformed issue yields one page_index=-1 row, a single bad page
-    quarantines only that page."""
-    schema = StructType(
-        [StructField("issue_id", StringType(), True),
-         StructField("page_index", LongType(), True)]
-        + [StructField(f.name, f.dataType, True) for f in LAYOUT_SCHEMA[1:]]
-        + [StructField("decode_error", StringType(), True)])
-
-    def fn(batches):
-        import pandas as pd
-
-        from ..stages.layout import split_columns_geometry
-        from ..stages.tiff import (
-            _decode_ifd, _ifd_offsets, _read_ifd_at, _tiff_byte_order,
-        )
-
-        def box(t):
-            if t is None:
-                return None
-            return {"x0": int(t[0]), "y0": int(t[1]),
-                    "x1": int(t[2]), "y1": int(t[3])}
-
-        def quarantine(iid, page_idx, exc):
-            return {"issue_id": iid, "page_index": page_idx,
-                    "boundaries": None, "body_top": None,
-                    "title_box": None, "column_boxes": None,
-                    "decode_error": f"{type(exc).__name__}: {exc}"}
-
-        for pdf in batches:
-            rows = []
-            for iid, data in zip(pdf[id_col], pdf[tiff_col]):
-                try:
-                    raw = bytes(data)
-                    bo = _tiff_byte_order(raw)
-                    offsets = _ifd_offsets(raw, bo)
-                except Exception as exc:  # noqa: BLE001 quarantine issue
-                    rows.append(quarantine(iid, -1, exc))
-                    continue
-                for idx, off in enumerate(offsets):
-                    try:
-                        tags, _ = _read_ifd_at(raw, bo, off)
-                        gray = _decode_ifd(raw, bo, tags)
-                        geo = split_columns_geometry(gray)
-                        rows.append({
-                            "issue_id": iid, "page_index": idx,
-                            "boundaries": [int(x)
-                                           for x in geo["boundaries"]],
-                            "body_top": [int(x) for x in geo["body_top"]],
-                            "title_box": box(geo["title_box"]),
-                            "column_boxes": [box(b)
-                                             for b in geo["column_boxes"]],
-                            "decode_error": None,
-                        })
-                    except Exception as exc:  # noqa: BLE001 - per page
-                        rows.append(quarantine(iid, idx, exc))
+                rows.extend({"issue_id": iid, "page_index": idx,
+                             **_page_row(page)}
+                            for idx, page in enumerate(pages))
             yield pd.DataFrame(rows)
 
     return df.mapInPandas(fn, schema=schema)

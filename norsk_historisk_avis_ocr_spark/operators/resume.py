@@ -3,15 +3,15 @@
 The reference resumes by probing for ``combined.txt`` per file
 (``ocr.py:45-47,151-181``). At table scale that existence probe is a
 **left-anti join** of the input against the committed results keys — a real
-relational operator here. The done-set is usually much smaller than the
-input on a resumed run's *remaining* work, but can be huge in absolute
-terms; the join therefore stays a shuffle join unless the caller knows the
-done-set is small and asks for a broadcast.
+relational operator here. The done-set can be huge in absolute terms, so
+the join is left to the planner (a shuffle join unless AQE sees a small
+side).
 """
 
 from __future__ import annotations
 
 import time
+from functools import reduce
 
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -19,13 +19,10 @@ from pyspark.sql import functions as F
 
 
 def resume_filter(pages: DataFrame, done_urls: DataFrame,
-                  broadcast_done: bool = False,
                   key_col: str = "url") -> DataFrame:
     """Rows of ``pages`` not yet committed: ``pages ⟕̸ done ON key``."""
-    done = done_urls.select(key_col).distinct()
-    if broadcast_done:
-        done = F.broadcast(done)
-    return pages.join(done, key_col, "left_anti")
+    return pages.join(done_urls.select(key_col).distinct(), key_col,
+                      "left_anti")
 
 
 class _LineageAccParam(AccumulatorParam):
@@ -86,41 +83,6 @@ def lineage_rows_from_stats(spark: SparkSession, stats: dict) -> DataFrame:
         LINEAGE_SCHEMA)
 
 
-def run_with_resume_bucketed(spark: SparkSession, pages_table: str,
-                             results_table: str, n_buckets: int = 64,
-                             extract_kwargs: dict | None = None) -> int:
-    """Resume over *bucketed catalog tables*: with both the pages snapshot
-    and the committed results bucketed by ``url`` on the same bucket count,
-    the per-batch anti-join reads matching buckets side by side — NO
-    shuffle of the 10^12-row pages table per resume (the dominant
-    non-map-stage cost of the path-based variant at scale; asserted
-    shuffle-free in tests/test_plans.py).
-
-    The bucketed append itself needs no shuffle either (each task streams
-    rows into per-bucket files); the cost is file count — tasks × buckets
-    per batch — which compaction or a pre-``repartition(n_buckets, url)``
-    handles when batches are small.
-
-    Returns the number of newly committed rows.
-    """
-    from .extract import extract_pages, split_quarantine
-
-    pages = spark.table(pages_table)
-    if spark.catalog.tableExists(results_table):
-        done = spark.table(results_table).select("url")
-    else:
-        done = spark.createDataFrame([], "url string")
-    todo = resume_filter(pages, done)
-    good, _bad = split_quarantine(todo)
-    results = extract_pages(good, **(extract_kwargs or {}))
-    # commit stats ride an accumulator on the write pass: ONE scan total
-    acc = spark.sparkContext.accumulator({}, _LineageAccParam())
-    with_lineage_stats(results, acc).write.mode("append") \
-        .bucketBy(n_buckets, "url").sortBy("url") \
-        .format("parquet").saveAsTable(results_table)
-    return sum(v[0] for v in acc.value.values())
-
-
 def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
                     lineage_path: str | None = None,
                     extract_kwargs: dict | None = None,
@@ -152,9 +114,9 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
     Quarantine (default html path only): the rows ``split_quarantine``
     rejects are counted by an ``Observation`` on the same write pass, and
     only a non-zero count triggers their append to ``quarantine_path``
-    after the commit. Rejected rows are never committed, so every resumed
-    run meets them again; they are anti-joined against the urls already
-    quarantined, which keeps each one there exactly once.
+    after the commit. The quarantined urls belong to the done set like
+    the committed ones, so a resumed run never meets them again: a url
+    stays quarantined until it is removed from that table.
     """
     from ..sources.sinks import (
         has_committed, read_done_urls, write_lineage, write_results,
@@ -163,9 +125,10 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
     if transform is not None and quarantine_path:
         raise ValueError("quarantine_path applies to the default html "
                          "path; a transform quarantines in-row")
-    todo = resume_filter(pages, read_done_urls(spark, out_path, key_col),
-                         key_col=key_col) \
-        if has_committed(out_path) else pages
+    done = [read_done_urls(spark, p, key_col)
+            for p in (out_path, quarantine_path) if p and has_committed(p)]
+    todo = resume_filter(pages, reduce(DataFrame.union, done),
+                         key_col=key_col) if done else pages
     observed = Observation("quarantine") if quarantine_path else None
     if transform is None:
         from .extract import extract_pages, split_quarantine
@@ -182,7 +145,5 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
             .withColumn("committed_at", F.lit(int(time.time())))
         write_lineage(lineage, lineage_path)
     if observed is not None and observed.get["n_bad"]:
-        if has_committed(quarantine_path):
-            bad = resume_filter(bad, read_done_urls(spark, quarantine_path))
         bad.write.mode("append").parquet(quarantine_path)
     return n

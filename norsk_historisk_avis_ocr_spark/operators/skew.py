@@ -43,8 +43,3 @@ def salted_sum(df: DataFrame, key: str, value: Column, alias: str,
     salted = with_salt(df, n_salts)
     partial = salted.groupBy(key, "_salt").agg(F.sum(value).alias("_s"))
     return partial.groupBy(key).agg(F.sum("_s").cast("long").alias(alias))
-
-
-def host_of(url: Column) -> Column:
-    """Host extraction for url-keyed skew ops (pages table)."""
-    return F.regexp_extract(url, r"^[a-z]+://([^/]+)/", 1)

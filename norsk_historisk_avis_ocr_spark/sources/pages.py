@@ -158,11 +158,6 @@ def build_page(doc_id: int, text: str, lang: str | None) -> dict:
     }
 
 
-def pages_rows(doc_rows) -> list[dict]:
-    """Driver-side helper for tests: list of (doc_id, text, lang) → pages."""
-    return [build_page(d, t, g) for d, t, g in doc_rows]
-
-
 def pages_df(spark: SparkSession, sf_dir: str, replicate: int = 1,
              with_sidecar: bool = False,
              partitions: int | None = None) -> DataFrame:

@@ -23,7 +23,7 @@ def _iceberg_available(spark: SparkSession) -> bool:
         spark.conf.get("spark.sql.catalog.spark_catalog", "")
 
 
-def write_results(df: DataFrame, path: str, mode: str = "append") -> None:
+def write_results(df: DataFrame, path: str) -> None:
     """Commit a results batch. Parquet append is atomic per job on a local
     filesystem (``_SUCCESS`` marker); with an Iceberg catalog configured the
     same call path would use ``writeTo(...).append()`` for snapshot
@@ -32,7 +32,7 @@ def write_results(df: DataFrame, path: str, mode: str = "append") -> None:
     if _iceberg_available(spark):  # pragma: no cover - not present in sandbox
         df.writeTo(path).append()
         return
-    df.write.mode(mode).option("compression", "zstd").parquet(path)
+    df.write.mode("append").option("compression", "zstd").parquet(path)
 
 
 def has_committed(path: str) -> bool:
@@ -43,25 +43,9 @@ def has_committed(path: str) -> bool:
 
 def read_done_urls(spark: SparkSession, path: str,
                    key_col: str = "url") -> DataFrame:
-    """Keys already committed to the results sink (empty if first run)."""
-    if has_committed(path):
-        return spark.read.parquet(path).select(key_col)
-    return spark.createDataFrame([], f"{key_col} string")
-
-
-def write_bucketed(df: DataFrame, table: str, bucket_col: str = "url",
-                   n_buckets: int = 64) -> None:
-    """Persist as a bucketed table so later joins on ``bucket_col``
-    co-locate without a shuffle (the 10^12-row resume anti-join: both the
-    pages snapshot and the committed results bucketed by url ⇒ the join
-    reads matching buckets side by side).
-
-    Bucketing requires the session catalog (``saveAsTable``); plain
-    ``.parquet(path)`` writes cannot carry bucket metadata.
-    """
-    df.write.mode("overwrite") \
-        .bucketBy(n_buckets, bucket_col).sortBy(bucket_col) \
-        .format("parquet").saveAsTable(table)
+    """Keys already committed to the sink at ``path``, which must hold a
+    committed file (:func:`has_committed`)."""
+    return spark.read.parquet(path).select(key_col)
 
 
 def write_lineage(metrics_df: DataFrame, path: str) -> None:

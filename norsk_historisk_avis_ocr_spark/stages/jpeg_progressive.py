@@ -53,61 +53,6 @@ def _ac_table_spec_prog() -> tuple[list[int], list[int]]:
     return bits, list(syms) + extra
 
 
-class _BitReader:
-    """MSB-first bit reader over a destuffed entropy segment with the
-    same zero-fill-past-end semantics as the baseline decoder (loud
-    truncation is checked by the caller via :meth:`overrun`).
-
-    Semantics reference only: the scan loops inline this cursor as local
-    ints (attribute access + call overhead is ~6× at per-symbol
-    granularity — 2.18 s → 0.36 s per 700×520 page); the inline code
-    must behave exactly like these methods."""
-
-    __slots__ = ("data", "n", "pos", "buf", "nbits")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.n = len(data)
-        self.pos = 0
-        self.buf = 0
-        self.nbits = 0
-
-    def _fill(self, want: int) -> None:
-        while self.nbits < want:
-            b = self.data[self.pos] if self.pos < self.n else 0
-            self.pos += 1
-            self.buf = ((self.buf << 8) | b) & 0xFFFFFFFFFF
-            self.nbits += 8
-
-    def bits(self, k: int) -> int:
-        if k == 0:
-            return 0
-        self._fill(k)
-        v = (self.buf >> (self.nbits - k)) & ((1 << k) - 1)
-        self.nbits -= k
-        return v
-
-    def huff(self, entry: list) -> tuple[int, int]:
-        """(symbol, code length) via the 2^16 peek table."""
-        self._fill(16)
-        e = entry[(self.buf >> (self.nbits - 16)) & 0xFFFF]
-        if e < 0:
-            raise ValueError("bad Huffman code (progressive)")
-        length = e & 31
-        self.nbits -= length
-        return e >> 5, length
-
-    def consumed_bits(self) -> int:
-        return (self.pos << 3) - self.nbits
-
-    def overrun(self) -> bool:
-        return self.consumed_bits() > (self.n << 3)
-
-
-def _extend(v: int, size: int) -> int:
-    return v - (1 << size) + 1 if v < (1 << (size - 1)) else v
-
-
 def _fused_ac_first(t) -> list[int]:
     """Fused AC-first decode table: 16-bit peek → the FULLY decoded
     symbol when the (run,size) code AND its magnitude bits fit in the
@@ -393,11 +338,10 @@ def _decode_scan_progressive(data, scan_start, sos, frame, htables,
                  if restart_interval else n_units)
         # inline bit cursor (locals, no per-symbol method calls — the
         # same lesson as the baseline scalar loop: attribute access and
-        # call overhead dominate per-symbol cost) with the zero-fill
-        # overfetch semantics of _BitReader, refilled 48 bits at a time
-        # from a zero-padded copy — the read pointer clamps into the pad
-        # so past-end reads yield zero bits (the baseline lockstep
-        # decoder's clamp trick), and a single `if` replaces the
+        # call overhead dominate per-symbol cost), MSB-first, refilled 48
+        # bits at a time from a zero-padded copy — the read pointer clamps
+        # into the pad so past-end reads yield zero bits (the baseline
+        # lockstep decoder's clamp trick), and a single `if` replaces the
         # per-byte fill loop (max deficit 16 < refill 48). The
         # per-segment truncation check at the bottom stays exact:
         # nbits tracks every unconsumed refill bit. Rows are mutated as

@@ -81,8 +81,7 @@ class OrthographyNormalizer:
         preserving the trailing-newline framing byte-for-byte — the
         correction-pass input framing
         (``tesseract_claude_engine.py:108-122``). Single source of truth
-        for the X4 pass in ``extract_one`` and for
-        ``extract_lang_routed``'s routed pass."""
+        for the X4 pass in ``extract_one``."""
         if transcribed.endswith("\n"):
             return self.normalize(transcribed[:-1]) + "\n"
         return self.normalize(transcribed)

@@ -28,11 +28,11 @@ from __future__ import annotations
 
 import re
 import zlib
+from functools import partial
 
 import numpy as np
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
 
 
 class _Stream:
@@ -741,22 +741,41 @@ def _decode_image(doc: _Doc, img: _Stream) -> np.ndarray:
 _MALFORMED = (TypeError, AttributeError, KeyError, OverflowError)
 
 
-def decode_pdf_page_image(data: bytes, page: int = 0) -> np.ndarray:
-    """Page ``page``'s largest image XObject → (H, W) uint8 luma — the
-    scanned-page decode path (a newspaper scan PDF is one full-page image
-    per page). Largest by pixel count, ties broken by XObject name order
-    (deterministic). Raises ``ValueError`` on anything it cannot decode
-    faithfully."""
+def _translated(fn, *args):
+    """``fn(*args)`` with malformed-graph errors raised as ``ValueError``."""
     try:
-        doc = _Doc(data)
-        pages = _walk_pages(doc)
-        if not 0 <= page < len(pages):
-            raise ValueError(f"PDF has {len(pages)} pages, no page {page}")
-        return _decode_largest(doc, *pages[page])
+        return fn(*args)
     except _MALFORMED as exc:
         raise ValueError(
             f"malformed PDF object graph: {type(exc).__name__}: {exc}"
         ) from exc
+
+
+def _open(data: bytes) -> tuple[_Doc, list[tuple[dict, dict | None]]]:
+    doc = _Doc(data)
+    return doc, _walk_pages(doc)
+
+
+def pdf_pages(data: bytes) -> list:
+    """Open a PDF → one zero-argument decoder per page, in document
+    order. Opening walks the object graph and the page tree only (no
+    image decode) and raises ``ValueError`` on a malformed container.
+    Each decoder returns that page's largest image XObject as (H, W)
+    uint8 luma — largest by pixel count, ties broken by XObject name
+    order — and raises ``ValueError`` if the page cannot be decoded
+    faithfully, so one bad page quarantines alone."""
+    doc, pages = _translated(_open, data)
+    return [partial(_translated, _decode_largest, doc, page, resources)
+            for page, resources in pages]
+
+
+def decode_pdf_page_image(data: bytes, page: int = 0) -> np.ndarray:
+    """Page ``page``'s image (see :func:`pdf_pages`) — the scanned-page
+    decode path (a newspaper scan PDF is one full-page image per page)."""
+    pages = pdf_pages(data)
+    if not 0 <= page < len(pages):
+        raise ValueError(f"PDF has {len(pages)} pages, no page {page}")
+    return pages[page]()
 
 
 def _decode_largest(doc: _Doc, page: dict,
@@ -774,28 +793,7 @@ def _decode_largest(doc: _Doc, page: dict,
 def pdf_page_count(data: bytes) -> int:
     """Number of pages (an O(page-tree) metadata probe — no image
     decode)."""
-    try:
-        return len(_walk_pages(_Doc(data)))
-    except _MALFORMED as exc:
-        raise ValueError(
-            f"malformed PDF object graph: {type(exc).__name__}: {exc}"
-        ) from exc
-
-
-def decode_pdf_page_images(data: bytes):
-    """Every page's largest image XObject, in document order — the shape
-    a multi-page newspaper issue has (the reference rasterizes and OCRs
-    each page: ``engines/tesseract_engine.py:133-142`` iterates poppler's
-    per-page output). Yields (page_index, (H, W) uint8) lazily so callers
-    can bound work."""
-    try:
-        doc = _Doc(data)
-        for idx, (page, resources) in enumerate(_walk_pages(doc)):
-            yield idx, _decode_largest(doc, page, resources)
-    except _MALFORMED as exc:
-        raise ValueError(
-            f"malformed PDF object graph: {type(exc).__name__}: {exc}"
-        ) from exc
+    return len(pdf_pages(data))
 
 
 # --- encoder (test/bench input generator) ----------------------------------

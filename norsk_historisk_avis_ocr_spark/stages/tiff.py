@@ -5,7 +5,7 @@ PIL, ``engines/tesseract_engine.py:133-144``); this closes the last
 sniffed-but-stubbed image format in ``operators/multimodal.py``:
 
 - :func:`decode_tiff_gray` — baseline TIFF → (H, W) uint8 (page N of
-  the chained-IFD sequence; :func:`decode_tiff_pages` iterates every
+  the chained-IFD sequence; :func:`tiff_pages` gives one decoder per
   page of a multi-IFD issue and :func:`tiff_page_count` probes the
   chain):
   8-bit grayscale (PhotometricInterpretation 0/1, BlackIsZero or
@@ -34,6 +34,7 @@ same loud-failure/quarantine contract as the PNG and JPEG codecs.
 from __future__ import annotations
 
 import struct
+from functools import partial
 
 import numpy as np
 
@@ -316,11 +317,6 @@ def _bit_windows(data: bytes) -> list[int]:
     position against the real bit length."""
     d = np.frombuffer(data + b"\x00" * 4, dtype=np.uint8).astype(np.uint32)
     return ((d[:-2] << 8 | d[1:-1]) << 8 | d[2:]).tolist()
-
-
-def _peek16(wins: list[int], p: int) -> int:
-    """16-bit MSB-first peek at bit ``p`` over :func:`_bit_windows`."""
-    return (wins[p >> 3] >> (8 - (p & 7))) & 0xFFFF
 
 
 def _read_t4_run(wins: list[int], nbits: int, p: int,
@@ -655,32 +651,36 @@ def _ifd_offsets(data: bytes, bo: str) -> list[int]:
     return offs
 
 
+def tiff_pages(data: bytes) -> list:
+    """Open a (multi-IFD) TIFF → one zero-argument decoder per page, in
+    chain order — the shape a scanned newspaper issue has (one IFD per
+    page). Opening walks the IFD chain only (no pixel decode) and raises
+    ``ValueError`` on a malformed container; each decoder returns that
+    page as (H, W) uint8 luma and raises ``ValueError`` if the page
+    cannot be decoded, so one bad page quarantines alone."""
+    bo = _tiff_byte_order(data)
+    return [partial(_decode_page_at, data, bo, off)
+            for off in _ifd_offsets(data, bo)]
+
+
+def _decode_page_at(data: bytes, bo: str, ifd_off: int) -> np.ndarray:
+    tags, _ = _read_ifd_at(data, bo, ifd_off)
+    return _decode_ifd(data, bo, tags)
+
+
 def tiff_page_count(data: bytes) -> int:
     """Number of pages (IFDs) — an O(chain) metadata probe, no pixel
     decode (the TIFF analog of :func:`stages.pdf.pdf_page_count`)."""
-    bo = _tiff_byte_order(data)
-    return len(_ifd_offsets(data, bo))
-
-
-def decode_tiff_pages(data: bytes):
-    """Every page of a multi-IFD TIFF in chain order — the shape a
-    scanned newspaper ISSUE has (one IFD per page). Yields
-    ``(page_index, (H, W) uint8)`` lazily so callers can bound work."""
-    bo = _tiff_byte_order(data)
-    for idx, off in enumerate(_ifd_offsets(data, bo)):
-        tags, _ = _read_ifd_at(data, bo, off)
-        yield idx, _decode_ifd(data, bo, tags)
+    return len(tiff_pages(data))
 
 
 def decode_tiff_gray(data: bytes, page: int = 0) -> np.ndarray:
     """Baseline TIFF bytes → (H, W) uint8 luma plane (page ``page`` of
     the IFD chain; single-page files have exactly one)."""
-    bo = _tiff_byte_order(data)
-    offs = _ifd_offsets(data, bo)
-    if not 0 <= page < len(offs):
-        raise ValueError(f"TIFF has {len(offs)} pages, no page {page}")
-    tags, _ = _read_ifd_at(data, bo, offs[page])
-    return _decode_ifd(data, bo, tags)
+    pages = tiff_pages(data)
+    if not 0 <= page < len(pages):
+        raise ValueError(f"TIFF has {len(pages)} pages, no page {page}")
+    return pages[page]()
 
 
 def _decode_ifd(data: bytes, bo: str,

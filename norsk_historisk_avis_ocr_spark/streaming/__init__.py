@@ -21,7 +21,7 @@ that would back a stateful variant lives as batch window operators in
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
 
 def read_pages_stream(spark: SparkSession, path: str,
                       max_files_per_trigger: int | None = None) -> DataFrame:
@@ -68,140 +68,3 @@ def run_incremental(spark: SparkSession, in_path: str, out_path: str,
                        .start())
     for q in queries:
         q.awaitTermination()
-
-
-def run_incremental_dedup(spark: SparkSession, in_path: str, out_path: str,
-                          checkpoint_path: str,
-                          watermark_delay: str | None = None) -> None:
-    """Streaming exact dedup (keep-first) over a growing pages directory:
-    the first page seen with a given text hash is committed, every later
-    duplicate — in the same micro-batch, a later batch, or a later RUN —
-    is dropped, because the dedup state lives in the checkpoint.
-
-    This is the streaming analog of ``dedup.dedup_keep_first``: a crawl
-    that continuously lands page files gets a deduplicated corpus without
-    re-scanning committed output (the batch anti-join shape) — the state
-    store IS the done-set. Keeper caveat vs the batch operator: across
-    batches/runs the earlier-committed page wins, but within one
-    micro-batch the keeper among simultaneous duplicates is whichever row
-    the tasks reach first (partition order) — streaming dropDuplicates has
-    no min-key tie-break. Output is therefore set-deterministic per text,
-    not row-deterministic; use ``dedup_keep_first`` when the keeper
-    identity matters.
-
-    Null-text pages carry no text identity: they are keyed by url instead
-    (``md5(NULL)`` is NULL and dropDuplicates treats NULL keys as equal —
-    keying on text alone would silently collapse every null-text page
-    into one row forever).
-
-    State shape at 10^12 rows: exact streaming dedup keeps one state row
-    per distinct key forever — unbounded. Pass ``watermark_delay`` (e.g.
-    ``"7 days"``) to bound it: duplicates are then only suppressed within
-    the watermark horizon on ``warc_ts``
-    (``dropDuplicatesWithinWatermark``), the standard
-    bounded-state/bounded-guarantee trade for infinite streams; near-dup
-    and exact batch jobs downstream catch strays beyond the horizon.
-    """
-    pages = read_pages_stream(spark, in_path) \
-        .withColumn("text_md5",
-                    F.coalesce(F.md5(F.col("text")),
-                               F.concat(F.lit("null-text:"), F.col("url"))))
-    if watermark_delay is not None:
-        deduped = pages.withWatermark("warc_ts", watermark_delay) \
-            .dropDuplicatesWithinWatermark(["text_md5"])
-    else:
-        deduped = pages.dropDuplicates(["text_md5"])
-    q = deduped.drop("text_md5").writeStream.format("parquet") \
-        .option("path", out_path) \
-        .option("checkpointLocation", checkpoint_path) \
-        .trigger(availableNow=True) \
-        .start()
-    q.awaitTermination()
-
-
-EVENTS_DDL = ("event_id long, ts timestamp_ntz, user_id long, "
-              "event_type string, value double, props string")
-
-
-def windowed_event_counts(spark: SparkSession, in_path: str,
-                          window: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
-    """Streaming event-time windowed aggregation with a late-data
-    watermark: per (window, event_type) counts + exact integer value sums.
-    The watermark bounds state (windows older than max(ts) − watermark are
-    finalized and evicted — at 10^12 events/day that bound is what keeps
-    the state store finite); events later than it are dropped by contract.
-    """
-    ev = spark.readStream.schema(EVENTS_DDL).parquet(in_path) \
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    return ev.withWatermark("ts", watermark) \
-        .groupBy(F.window("ts", window).alias("w"), "event_type") \
-        .agg(F.count("*").alias("n_events"),
-             F.sum(F.round(F.col("value") * 1000).cast("long"))
-              .alias("value_milli")) \
-        .select(F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
-                "event_type", "n_events", "value_milli")
-
-
-def stateful_user_totals(spark: SparkSession, in_path: str, out_path: str,
-                         checkpoint_path: str) -> None:
-    """Custom stateful streaming operator via ``applyInPandasWithState``:
-    a per-user running event total maintained in the state store across
-    micro-batches AND across restarts (the checkpoint carries the state).
-    Each batch emits the updated totals for the users it touched, appended
-    with the micro-batch id via ``foreachBatch`` (update-mode output; the
-    row with the highest batch id per user is the current total).
-
-    This is the pattern a custom incremental aggregator (per-host crawl
-    counters, per-source quality accumulators) uses when built-in windowed
-    aggregation can't express the state transition.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ev = spark.readStream.schema(EVENTS_DDL).parquet(in_path)
-
-    def update(key, pdfs, state):
-        n = 0
-        for pdf in pdfs:
-            n += len(pdf)
-        total = state.get[0] if state.exists else 0
-        total += n
-        state.update((total,))
-        yield pd.DataFrame({"user_id": [key[0]],
-                            "n_events_total": [total]})
-
-    updates = ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id long, n_events_total long",
-        stateStructType="total long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-
-    def sink(batch_df, batch_id):
-        batch_df.withColumn("batch_id", F.lit(batch_id)) \
-            .write.mode("append").parquet(out_path)
-
-    q = updates.writeStream.foreachBatch(sink) \
-        .outputMode("update") \
-        .option("checkpointLocation", checkpoint_path) \
-        .trigger(availableNow=True) \
-        .start()
-    q.awaitTermination()
-
-
-def run_windowed_counts(spark: SparkSession, in_path: str, out_path: str,
-                        checkpoint_path: str, window: str = "1 hour",
-                        watermark: str = "2 hours") -> None:
-    """Materialize the windowed counts for the currently-available backlog
-    (availableNow; append mode emits only watermark-finalized windows)."""
-    agg = windowed_event_counts(spark, in_path, window, watermark)
-    q = agg.writeStream.format("parquet") \
-        .outputMode("append") \
-        .option("path", out_path) \
-        .option("checkpointLocation", checkpoint_path) \
-        .trigger(availableNow=True) \
-        .start()
-    q.awaitTermination()

@@ -1,5 +1,6 @@
 """``jobs/extract.py --quarantine`` end to end: good rows commit, rejected
-rows land in the quarantine table exactly once across resumed runs, the
+rows land in the quarantine table exactly once across resumed runs (a
+resumed pass treats them as done and writes no quarantine file), the
 quarantine count rides the commit pass (no separate ``count`` job), and
 lineage is one file per pass whose ``n_urls`` sum to the rows committed."""
 
@@ -42,8 +43,9 @@ def test_quarantine_job_end_to_end(spark, sf_dir, tmp_path):
         sc.setJobGroup("quarantine-pass-1", "first pass")
         job.main(argv)
         plans = _group_plans(spark, "quarantine-pass-1")
-        # a resumed pass over two new pages: the rejected rows meet the
-        # job again and must not be appended a second time
+        quarantine_files = len(_parquet_files(quar))
+        # a resumed pass over two new pages: the quarantined rows are done,
+        # so they are neither scanned for nor appended a second time
         spark.createDataFrame(good[3:], _SCHEMA).write.mode("append") \
             .parquet(inp)
         sc.setJobGroup("quarantine-pass-2", "resumed pass")
@@ -62,6 +64,8 @@ def test_quarantine_job_end_to_end(spark, sf_dir, tmp_path):
         sorted(g[0] for g in good)
     assert sorted(tuple(r) for r in spark.read.parquet(quar).collect()) == \
         [("bad-big", "oversized_html"), ("bad-null", "null_html")]
+    # the resumed pass wrote no quarantine file, not even an empty one
+    assert len(_parquet_files(quar)) == quarantine_files
     assert len(_parquet_files(lin)) == 2  # one lineage file per pass
     assert spark.read.parquet(lin).agg({"n_urls": "sum"}).first()[0] == \
         committed.count() == 5

@@ -13,8 +13,8 @@ from norsk_historisk_avis_ocr_spark.stages.jpeg import (
     decode_jpeg_gray, encode_jpeg_gray,
 )
 from norsk_historisk_avis_ocr_spark.stages.pdf import (
-    decode_pdf_page_image, decode_pdf_page_images, encode_pdf_gray,
-    encode_pdf_pages, pdf_page_count,
+    decode_pdf_page_image, encode_pdf_gray, encode_pdf_pages,
+    pdf_page_count, pdf_pages,
 )
 
 
@@ -193,27 +193,24 @@ def test_pdf_pages_segment_end_to_end(spark):
 
 
 def test_multipage_pdf_roundtrip_and_count():
-    from norsk_historisk_avis_ocr_spark.stages.pdf import (
-        decode_pdf_page_images, encode_pdf_pages, pdf_page_count,
-    )
     pages = [_gradient(24 + 8 * i, 40) for i in range(3)]
     pdf = encode_pdf_pages(pages, codec="flate")
     assert pdf_page_count(pdf) == 3
     for i, img in enumerate(pages):
         assert (decode_pdf_page_image(pdf, page=i) == img).all()
-    got = list(decode_pdf_page_images(pdf))
-    assert [i for i, _ in got] == [0, 1, 2]
-    assert all((a == b).all() for (_, a), b in zip(got, pages))
+    got = [decode() for decode in pdf_pages(pdf)]
+    assert len(got) == 3
+    assert all((a == b).all() for a, b in zip(got, pages))
     with pytest.raises(ValueError, match="no page 5"):
         decode_pdf_page_image(pdf, page=5)
 
 
-def test_segment_pdf_issues_explodes_pages(spark):
+def test_segment_issues_explodes_pdf_pages(spark):
     """1→N issue explosion: every page of a multi-page scan PDF becomes
     a geometry row; a corrupt issue quarantines as one page_index=-1 row
     without failing the task."""
     from norsk_historisk_avis_ocr_spark.operators.raster import (
-        segment_pdf_issues,
+        segment_issues,
     )
     from norsk_historisk_avis_ocr_spark.sources.rasters import (
         synth_page_array,
@@ -224,11 +221,15 @@ def test_segment_pdf_issues_explodes_pages(spark):
          for i in range(2)], codec="flate")
     df = spark.createDataFrame(
         [("issue-1", bytearray(issue)),
-         ("issue-bad", bytearray(b"%PDF-1.4 garbage no xref"))],
-        "issue_id string, pdf binary")
+         ("issue-bad", bytearray(b"%PDF-1.4 garbage no xref")),
+         ("issue-null", None)],
+        "issue_id string, payload binary")
     rows = {(r.issue_id, r.page_index): r
-            for r in segment_pdf_issues(df).collect()}
-    assert set(rows) == {("issue-1", 0), ("issue-1", 1), ("issue-bad", -1)}
+            for r in segment_issues(df).collect()}
+    assert set(rows) == {("issue-1", 0), ("issue-1", 1), ("issue-bad", -1),
+                         ("issue-null", -1)}
+    assert rows[("issue-null", -1)].decode_error.startswith("TypeError")
+    assert rows[("issue-null", -1)].boundaries is None
     assert rows[("issue-1", 0)].decode_error is None
     assert rows[("issue-1", 0)].column_boxes
     assert rows[("issue-1", 1)].decode_error is None
@@ -347,7 +348,7 @@ def test_xref_stream_roundtrips():
                {"xref": "stream", "objstm": True, "xref_predictor": True}):
         pdf = encode_pdf_pages([img, img2], **kw)
         assert pdf_page_count(pdf) == 2, kw
-        pages = dict(decode_pdf_page_images(pdf))
+        pages = [decode() for decode in pdf_pages(pdf)]
         assert (pages[0] == img).all() and (pages[1] == img2).all(), kw
     # DCT arm through an ObjStm-packed graph
     pdfj = encode_pdf_gray(img, codec="jpeg", xref="stream", objstm=True)

@@ -101,12 +101,6 @@ def test_run_with_resume_idempotent(spark, sf_dir, tmp_path):
     pages.unpersist()
 
 
-def test_extract_decorrelate_plan_is_single_shuffle(spark, sf_dir):
-    df = extract_pages(pages_df(spark, sf_dir), decorrelate=True)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.lower().count("exchange") <= 1
-
-
 def test_final_column_coalesce(spark, sf_dir):
     with_norm = extract_pages(pages_df(spark, sf_dir).limit(10))
     for r in with_norm.select("final", "normalized").collect():
@@ -183,58 +177,6 @@ def test_normalize_langs_gating(spark):
     assert rows["u-sv"].final == rows["u-sv"].transcribed
 
 
-def test_resume_bucketed_tables_shuffle_free(spark, sf_dir):
-    """Bucketed-catalog resume: idempotent across runs AND the anti-join
-    over the two bucketed tables plans without an Exchange."""
-    from norsk_historisk_avis_ocr_spark.operators.resume import (
-        resume_filter, run_with_resume_bucketed,
-    )
-    from norsk_historisk_avis_ocr_spark.sources.sinks import write_bucketed
-    spark.sql("DROP TABLE IF EXISTS pages_rb")
-    spark.sql("DROP TABLE IF EXISTS results_rb")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(pages_df(spark, sf_dir).limit(30), "pages_rb",
-                       "url", 8)
-        assert run_with_resume_bucketed(spark, "pages_rb", "results_rb",
-                                        n_buckets=8) == 30
-        assert run_with_resume_bucketed(spark, "pages_rb", "results_rb",
-                                        n_buckets=8) == 0
-        assert spark.table("results_rb").select("url").distinct() \
-            .count() == 30
-        plan = resume_filter(
-            spark.table("pages_rb"),
-            spark.table("results_rb")) \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS pages_rb")
-        spark.sql("DROP TABLE IF EXISTS results_rb")
-
-
-def test_normalize_tables_per_language(spark):
-    """Each row is normalized with ITS language's trie: the same OCR error
-    maps to different corrections per language table."""
-    from norsk_historisk_avis_ocr_spark.stages.normalize import (
-        OrthographyNormalizer,
-    )
-    html = ("<html><body><table><tr><td>rnann clet</td></tr>"
-            "</table></body></html>").encode()
-    no_table = OrthographyNormalizer({"rnann": "mann", "clet": "det"})
-    sv_table = OrthographyNormalizer({"rnann": "man"})
-    df = spark.createDataFrame(
-        [("u-no", bytearray(html), "no"), ("u-sv", bytearray(html), "sv"),
-         ("u-en", bytearray(html), "en")],
-        "url string, html binary, lang string")
-    rows = {r.url: r for r in extract_pages(
-        df, normalize_tables={"no": no_table, "sv": sv_table}).collect()}
-    assert rows["u-no"].normalized.startswith("mann det")
-    assert rows["u-sv"].normalized.startswith("man clet")
-    assert rows["u-en"].normalized is None          # no table → X5 coalesce
-    assert rows["u-en"].final == rows["u-en"].transcribed
-
-
 def test_normalize_langs_requires_lang_column(spark):
     import pytest as _pytest
     df = spark.createDataFrame(
@@ -244,9 +186,19 @@ def test_normalize_langs_requires_lang_column(spark):
 
 
 def test_read_done_urls_edge_cases(spark, tmp_path):
-    from norsk_historisk_avis_ocr_spark.sources.sinks import read_done_urls
-    missing = read_done_urls(spark, str(tmp_path / "never_written"))
-    assert missing.count() == 0 and missing.columns == ["url"]
+    """The done set is read only from a path holding a committed file: a
+    missing path or an empty directory holds none."""
+    from norsk_historisk_avis_ocr_spark.sources.sinks import (
+        has_committed, read_done_urls, write_results,
+    )
+    assert not has_committed(str(tmp_path / "never_written"))
     empty_dir = tmp_path / "empty"
     empty_dir.mkdir()
-    assert read_done_urls(spark, str(empty_dir)).count() == 0
+    assert not has_committed(str(empty_dir))
+    out = str(tmp_path / "results")
+    write_results(spark.createDataFrame([("u1", 1), ("u2", 2)],
+                                        "url string, n int"), out)
+    assert has_committed(out)
+    done = read_done_urls(spark, out)
+    assert done.columns == ["url"]
+    assert sorted(r.url for r in done.collect()) == ["u1", "u2"]

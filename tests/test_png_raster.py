@@ -143,9 +143,9 @@ def test_decode_media_real_png_dimensions_and_histogram():
     assert feats[0] > 0.7 and feats[1:15].sum() == 0
 
 
-def test_segment_png_pages_matches_local(spark):
+def test_segment_image_pages_matches_local(spark):
     from norsk_historisk_avis_ocr_spark.operators.raster import (
-        segment_png_pages,
+        segment_image_pages,
     )
     from norsk_historisk_avis_ocr_spark.sources.rasters import (
         synth_page_array,
@@ -156,7 +156,7 @@ def test_segment_png_pages_matches_local(spark):
     pids = [f"png-{i}" for i in range(4)]
     rows = [(p, bytearray(encode_png(synth_page_array(p)))) for p in pids]
     df = spark.createDataFrame(rows, "page_id string, png binary")
-    got = {r.page_id: r for r in segment_png_pages(df).collect()}
+    got = {r.page_id: r for r in segment_image_pages(df).collect()}
     for p in pids:
         local = split_columns_geometry(synth_page_array(p))
         assert got[p].decode_error is None
@@ -164,15 +164,20 @@ def test_segment_png_pages_matches_local(spark):
         assert got[p].body_top == local["body_top"]
 
 
-def test_segment_png_pages_quarantines_bad_payload(spark):
+def test_segment_image_pages_quarantines_bad_payload(spark):
     from norsk_historisk_avis_ocr_spark.operators.raster import (
-        segment_png_pages,
+        segment_image_pages,
     )
     df = spark.createDataFrame(
-        [("bad", bytearray(b"\x89PNG\r\n\x1a\nGARBAGE"))],
+        [("bad", bytearray(b"\x89PNG\r\n\x1a\nGARBAGE")), ("null", None)],
         "page_id string, png binary")
-    r = segment_png_pages(df).first()
-    assert r.boundaries is None and r.decode_error is not None
+    rows = {r.page_id: r for r in segment_image_pages(df).collect()}
+    assert set(rows) == {"bad", "null"}
+    for r in rows.values():
+        assert r.decode_error is not None
+        assert r.boundaries is None and r.body_top is None
+        assert r.title_box is None and r.column_boxes is None
+    assert rows["null"].decode_error.startswith("TypeError")
 
 
 def test_raster_pages_df_deterministic(spark, sf_dir):

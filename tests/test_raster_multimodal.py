@@ -1,50 +1,108 @@
 """Spark wiring of the raster layout path (L1-L4) and multimodal plumbing."""
 
+import struct
+
 import numpy as np
 import pytest
 
 from norsk_historisk_avis_ocr_spark.operators.multimodal import (
     MEDIA_FEATURE_DIM, media_features, sniff_media_type,
 )
-from norsk_historisk_avis_ocr_spark.operators.raster import segment_rasters
+from norsk_historisk_avis_ocr_spark.operators.raster import (
+    segment_image_pages, segment_issues,
+)
+from norsk_historisk_avis_ocr_spark.sources.rasters import synth_page_array
+from norsk_historisk_avis_ocr_spark.stages.layout import (
+    split_columns_geometry,
+)
+from norsk_historisk_avis_ocr_spark.stages.pdf import encode_pdf_pages
+from norsk_historisk_avis_ocr_spark.stages.png import encode_png
+from norsk_historisk_avis_ocr_spark.stages.tiff import encode_tiff_multi
 
 
-def _page_bytes():
+def _page_png():
     img = np.full((1200, 2000), 255, dtype=np.uint8)
     img[:, 712:715] = 0
     img[:, 1440:1443] = 0
     img[0:1200:2, 10:700] = 0
     img[0:1200:2, 730:1430] = 0
     img[0:1200:2, 1460:1990] = 0
-    return img.tobytes(), 2000, 1200
+    return encode_png(img)
 
 
-def test_segment_rasters_geometry(spark):
-    data, w, h = _page_bytes()
+def test_segment_image_pages_geometry(spark):
     df = spark.createDataFrame(
-        [("p1", bytearray(data), w, h)],
-        "page_id string, gray binary, width int, height int")
-    got = segment_rasters(df).collect()
+        [("p1", bytearray(_page_png()))], "page_id string, png binary")
+    got = segment_image_pages(df).collect()
     assert len(got) == 1
     r = got[0]
+    assert r.decode_error is None
     assert r.boundaries == [0, 713, 1441, 2000]
     assert [b.x0 for b in r.column_boxes] == [0, 693, 1421]
     assert r.title_box is None
 
 
-def test_segment_rasters_matches_local_library(spark):
-    from norsk_historisk_avis_ocr_spark.stages.layout import (
-        split_columns_geometry,
-    )
-    data, w, h = _page_bytes()
-    local = split_columns_geometry(
-        np.frombuffer(data, dtype=np.uint8).reshape(h, w))
-    df = spark.createDataFrame(
-        [("p1", bytearray(data), w, h)],
-        "page_id string, gray binary, width int, height int")
-    r = segment_rasters(df).first()
-    assert r.boundaries == local["boundaries"]
-    assert r.body_top == local["body_top"]
+def _corrupt_pdf_page(issue: bytes, k: int) -> bytes:
+    """Give page ``k``'s image an unknown filter name of the same length,
+    so every offset stays valid: the issue opens, only that page fails."""
+    at = -1
+    for _ in range(k + 1):
+        at = issue.index(b"/Filter /FlateDecode", at + 1)
+    return issue[:at] + b"/Filter /BogusDecode" + issue[at + 20:]
+
+
+def _corrupt_tiff_page(issue: bytes, k: int) -> bytes:
+    """Set page ``k``'s Compression tag (259) to 7, JPEG-in-TIFF, which
+    the decoder rejects; the IFD chain itself stays intact."""
+    data = bytearray(issue)
+    (ifd,) = struct.unpack_from("<I", data, 4)
+    for _ in range(k):
+        (n,) = struct.unpack_from("<H", data, ifd)
+        (ifd,) = struct.unpack_from("<I", data, ifd + 2 + 12 * n)
+    (n,) = struct.unpack_from("<H", data, ifd)
+    for entry in range(ifd + 2, ifd + 2 + 12 * n, 12):
+        if struct.unpack_from("<H", data, entry)[0] == 259:
+            struct.pack_into("<I", data, entry + 8, 7)
+    return bytes(data)
+
+
+def _geometry(r):
+    """A result row's geometry as plain ints and (x0, y0, x1, y1) tuples."""
+    def box(b):
+        return None if b is None else (b.x0, b.y0, b.x1, b.y1)
+    return (r.boundaries, r.body_top, box(r.title_box),
+            [box(b) for b in r.column_boxes])
+
+
+def _expected(geo):
+    """``split_columns_geometry`` output in the shape of ``_geometry``."""
+    def box(b):
+        return None if b is None else tuple(int(v) for v in b)
+    return ([int(x) for x in geo["boundaries"]],
+            [int(x) for x in geo["body_top"]], box(geo["title_box"]),
+            [box(b) for b in geo["column_boxes"]])
+
+
+@pytest.mark.parametrize("codec", ["pdf", "tiff"])
+def test_segment_issues_quarantines_one_page(spark, codec):
+    """A 3-page issue whose page 1 cannot be decoded: pages 0 and 2 still
+    get their geometry, and only page 1 carries the decode error."""
+    pages = [synth_page_array(f"{codec}-{k}", width=300, height=260)
+             for k in range(3)]
+    if codec == "pdf":
+        issue = _corrupt_pdf_page(encode_pdf_pages(pages, codec="flate"), 1)
+    else:
+        issue = _corrupt_tiff_page(encode_tiff_multi(pages), 1)
+    df = spark.createDataFrame([("issue", bytearray(issue))],
+                               "issue_id string, payload binary")
+    rows = sorted(segment_issues(df).collect(), key=lambda r: r.page_index)
+    assert [r.page_index for r in rows] == [0, 1, 2]
+    for k in (0, 2):
+        assert rows[k].decode_error is None
+        assert _geometry(rows[k]) == _expected(
+            split_columns_geometry(pages[k]))
+    assert rows[1].decode_error.startswith("ValueError"), rows[1]
+    assert rows[1].boundaries is None and rows[1].column_boxes is None
 
 
 def test_sniff_media_type():

@@ -233,46 +233,6 @@ def test_pack_sequences_block_semantics(spark, sf_dir):
             start += r.n_tokens
 
 
-def test_extract_lang_routed_by_prediction(spark):
-    """Normalization routed by PREDICTED language: the same OCR error gets
-    each language's correction, keyed by the marker words in the page
-    text itself (no lang column consulted)."""
-    from norsk_historisk_avis_ocr_spark.operators.extract import (
-        extract_lang_routed,
-    )
-    from norsk_historisk_avis_ocr_spark.stages.normalize import (
-        OrthographyNormalizer,
-    )
-
-    def page(words):
-        body = " ".join(words)
-        return ("<html><body><table><tr><td>" + body +
-                "</td></tr></table></body></html>").encode()
-
-    # 'og det som på av' → no markers; 'the and of to in' → en markers
-    df = spark.createDataFrame(
-        [("u-no", bytearray(page(["rnann", "og", "det", "som", "på", "av"]))),
-         ("u-en", bytearray(page(["rnann", "the", "and", "of", "to", "in"]))),
-         ("u-uk", bytearray(page(["rnann", "zzz", "qqq", "xxx", "yyy"])))],
-        "url string, html binary")
-    tables = {"no": OrthographyNormalizer({"rnann": "mann"}),
-              "en": OrthographyNormalizer({"rnann": "man"})}
-    rows = {r.url: r for r in extract_lang_routed(df, tables).collect()}
-    assert rows["u-no"].pred_lang == "no"
-    assert rows["u-no"].normalized.startswith("mann og")
-    assert rows["u-en"].pred_lang == "en"
-    assert rows["u-en"].normalized.startswith("man the")
-    assert rows["u-uk"].pred_lang == "und"
-    assert rows["u-uk"].normalized is None          # no table → X5 coalesce
-    assert rows["u-uk"].final == rows["u-uk"].transcribed
-    for r in rows.values():                         # framing preserved
-        assert r.final.endswith("\n")
-    # plan stays shuffle-free (two map stages + projections)
-    plan = extract_lang_routed(df, tables) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
 def test_prepare_corpus_cli_end_to_end(spark, sf_dir, tmp_path):
     """spark-submit-shaped corpus job: documents in → split-partitioned
     packed corpus out, with hygiene verdicts attached."""

@@ -40,91 +40,6 @@ def test_incremental_quarantine_sink(spark, sf_dir, tmp_path):
         [("bad-url", "null_html")]
 
 
-def test_windowed_counts_watermark_finalization(spark, sf_dir, tmp_path):
-    """Event-time windowed counts with a late-data watermark: after a
-    second micro-batch advances the watermark, exactly the finalized
-    windows (window_end ≤ max(ts of batch 1) − delay) are emitted, with
-    values identical to the batch aggregation."""
-    import os as _os
-
-    from norsk_historisk_avis_ocr_spark.streaming import run_windowed_counts
-
-    in_path = str(tmp_path / "events_in")
-    out = str(tmp_path / "win_out")
-    ckpt = str(tmp_path / "win_ckpt")
-
-    events = spark.read.parquet(_os.path.join(sf_dir, "events.parquet")) \
-        .withColumn("ts_s", F.col("ts").cast("timestamp").cast("long"))
-    cut = events.selectExpr(
-        "percentile_disc(0.5) WITHIN GROUP (ORDER BY ts_s)").first()[0]
-    first = events.filter(F.col("ts_s") <= cut).drop("ts_s")
-    second = events.filter(F.col("ts_s") > cut).drop("ts_s")
-    assert first.count() and second.count()
-
-    first.write.mode("append").parquet(in_path)
-    run_windowed_counts(spark, in_path, out, ckpt,
-                        window="1 hour", watermark="2 hours")
-    second.write.mode("append").parquet(in_path)
-    run_windowed_counts(spark, in_path, out, ckpt,
-                        window="1 hour", watermark="2 hours")
-
-    got = {(r.window_start, r.window_end, r.event_type):
-           (r.n_events, r.value_milli)
-           for r in spark.read.parquet(out).collect()}
-    assert got, "watermark never finalized any window"
-
-    # batch truth, restricted to finalized windows: availableNow runs a
-    # final no-data micro-batch, so emission uses the fully-advanced
-    # watermark max(all ts) − delay (no batch-2 event is late — batch 2 is
-    # entirely newer than the batch-1 watermark)
-    wm = events.select(
-        (F.max(F.col("ts").cast("timestamp"))
-         - F.expr("INTERVAL 2 HOURS")).alias("wm")).first()[0]
-    batch = events.groupBy(F.window(F.col("ts").cast("timestamp"),
-                                    "1 hour").alias("w"), "event_type") \
-        .agg(F.count("*").alias("n"),
-             F.sum(F.round(F.col("value") * 1000).cast("long")).alias("vm")) \
-        .filter(F.col("w.end") <= F.lit(wm))
-    expect = {(r["w"].start, r["w"].end, r.event_type): (r.n, r.vm)
-              for r in batch.collect()}
-    assert got == expect
-
-
-def test_stateful_user_totals_across_runs(spark, sf_dir, tmp_path):
-    """applyInPandasWithState: the per-user running total survives the
-    checkpointed restart — after two separate availableNow runs over two
-    file batches, the latest emitted total per user equals the batch
-    count over ALL events."""
-    import os as _os
-
-    from norsk_historisk_avis_ocr_spark.streaming import stateful_user_totals
-
-    in_path = str(tmp_path / "st_in")
-    out = str(tmp_path / "st_out")
-    ckpt = str(tmp_path / "st_ckpt")
-
-    events = spark.read.parquet(_os.path.join(sf_dir, "events.parquet"))
-    first = events.filter(F.col("event_id") % 2 == 0)
-    second = events.filter(F.col("event_id") % 2 != 0)
-
-    first.write.mode("append").parquet(in_path)
-    stateful_user_totals(spark, in_path, out, ckpt)
-    second.write.mode("append").parquet(in_path)
-    stateful_user_totals(spark, in_path, out, ckpt)
-
-    emitted = spark.read.parquet(out)
-    from pyspark.sql import Window
-    latest = emitted.withColumn(
-        "rn", F.row_number().over(
-            Window.partitionBy("user_id").orderBy(F.col("batch_id").desc()))
-    ).filter("rn = 1")
-    got = {r.user_id: r.n_events_total for r in latest.collect()}
-    expect = {r.user_id: r.n for r in
-              events.groupBy("user_id").agg(F.count("*").alias("n"))
-              .collect()}
-    assert got == expect
-
-
 def test_incremental_matches_batch_and_resumes(spark, sf_dir, tmp_path):
     in_path = str(tmp_path / "incoming")
     out = str(tmp_path / "stream_results")
@@ -162,75 +77,3 @@ def test_incremental_matches_batch_and_resumes(spark, sf_dir, tmp_path):
     assert a == b
     pages.unpersist()
     assert os.path.isdir(ckpt)
-
-
-def test_incremental_dedup_across_runs(spark, sf_dir, tmp_path):
-    """Streaming keep-first dedup: duplicates are suppressed within a
-    batch, across micro-batches, and across RUNS (checkpointed state is
-    the done-set); a fresh text in a later run still lands."""
-    from norsk_historisk_avis_ocr_spark.streaming import run_incremental_dedup
-
-    in_path = str(tmp_path / "dd_in")
-    out = str(tmp_path / "dd_out")
-    ckpt = str(tmp_path / "dd_ckpt")
-
-    base = pages_df(spark, sf_dir).limit(10).cache()
-    base.write.mode("append").parquet(in_path)          # originals
-    base.limit(4).withColumn("url", F.concat(F.col("url"), F.lit("#dup"))) \
-        .write.mode("append").parquet(in_path)          # in-run duplicates
-    run_incremental_dedup(spark, in_path, out, ckpt)
-    assert spark.read.parquet(out).count() == 10
-
-    # later run: more duplicates of committed texts + 2 genuinely new ones
-    base.limit(6).withColumn("url", F.concat(F.col("url"), F.lit("#dup2"))) \
-        .write.mode("append").parquet(in_path)
-    fresh = pages_df(spark, sf_dir).orderBy(F.desc("url")).limit(2)
-    fresh.write.mode("append").parquet(in_path)
-    run_incremental_dedup(spark, in_path, out, ckpt)
-    got = spark.read.parquet(out)
-    assert got.count() == 12
-    assert got.select(F.md5("text")).distinct().count() == 12
-    base.unpersist()
-
-
-def test_incremental_dedup_watermark_variant(spark, sf_dir, tmp_path):
-    """Bounded-state variant: dropDuplicatesWithinWatermark on warc_ts
-    still deduplicates the backlog (all synthetic timestamps are within
-    the horizon)."""
-    from norsk_historisk_avis_ocr_spark.streaming import run_incremental_dedup
-
-    in_path = str(tmp_path / "ddw_in")
-    out = str(tmp_path / "ddw_out")
-    ckpt = str(tmp_path / "ddw_ckpt")
-
-    base = pages_df(spark, sf_dir).limit(8)
-    base.write.mode("append").parquet(in_path)
-    base.withColumn("url", F.concat(F.col("url"), F.lit("#dup"))) \
-        .write.mode("append").parquet(in_path)
-    run_incremental_dedup(spark, in_path, out, ckpt,
-                          watermark_delay="3650 days")
-    assert spark.read.parquet(out).count() == 8
-
-
-def test_incremental_dedup_null_text_not_collapsed(spark, sf_dir, tmp_path):
-    """Null-text pages carry no text identity and must NOT collapse into
-    one row (md5(NULL) keys would compare equal); they dedup by url."""
-    import datetime
-
-    from norsk_historisk_avis_ocr_spark.streaming import run_incremental_dedup
-
-    in_path = str(tmp_path / "ddn_in")
-    out = str(tmp_path / "ddn_out")
-    ckpt = str(tmp_path / "ddn_ckpt")
-
-    ts = datetime.datetime(2024, 1, 1)
-    rows = [(f"u{i}", ts, bytearray(b"<html></html>"), None, "en")
-            for i in range(5)]
-    rows.append(("u0", ts, bytearray(b"<html></html>"), None, "en"))  # dup url
-    spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html binary, text string, "
-              "lang string").write.mode("append").parquet(in_path)
-    run_incremental_dedup(spark, in_path, out, ckpt)
-    got = spark.read.parquet(out)
-    assert got.count() == 5                      # all distinct urls kept
-    assert got.filter(F.col("text").isNull()).count() == 5

@@ -699,14 +699,15 @@ def test_multipage_tiff_roundtrip_and_count():
     """Multi-IFD TIFFs (one page per IFD — the scanned-issue shape)
     roundtrip per page; tiff_page_count is a metadata probe."""
     from norsk_historisk_avis_ocr_spark.stages.tiff import (
-        decode_tiff_gray, decode_tiff_pages, encode_tiff_multi,
-        tiff_page_count,
+        decode_tiff_gray, encode_tiff_multi, tiff_page_count, tiff_pages,
     )
     pages = [_gradient(20 + k, 30 + 2 * k) for k in range(3)]
     data = encode_tiff_multi(pages)
     assert tiff_page_count(data) == 3
-    for idx, arr in decode_tiff_pages(data):
-        assert (arr == pages[idx]).all(), idx
+    decoders = tiff_pages(data)
+    assert len(decoders) == 3
+    for idx, decode in enumerate(decoders):
+        assert (decode() == pages[idx]).all(), idx
     assert (decode_tiff_gray(data, page=2) == pages[2]).all()
     with pytest.raises(ValueError, match="no page"):
         decode_tiff_gray(data, page=3)
@@ -720,11 +721,12 @@ def test_multipage_tiff_roundtrip_and_count():
         tiff_page_count(bytes(evil))
 
 
-def test_segment_tiff_issues_explodes_pages(spark):
-    """segment_tiff_issues: 1 issue -> N page rows; a corrupt issue and
-    a corrupt single page quarantine without failing the task."""
+def test_segment_issues_explodes_tiff_pages(spark):
+    """segment_issues on a multi-IFD TIFF: 1 issue -> N page rows; a
+    truncated issue quarantines as one page_index=-1 row without failing
+    the task."""
     from norsk_historisk_avis_ocr_spark.operators.raster import (
-        segment_tiff_issues,
+        segment_issues,
     )
     from norsk_historisk_avis_ocr_spark.sources.rasters import (
         synth_page_array,
@@ -738,8 +740,8 @@ def test_segment_tiff_issues_explodes_pages(spark):
     corrupt = good[:40]
     df = spark.createDataFrame(
         [("issue-good", bytearray(good)), ("issue-bad", bytearray(corrupt))],
-        "issue_id string, tiff binary")
-    rows = segment_tiff_issues(df).collect()
+        "issue_id string, payload binary")
+    rows = segment_issues(df).collect()
     by = {(r.issue_id, r.page_index): r for r in rows}
     assert len(by) == 4
     for k in range(3):
@@ -755,7 +757,7 @@ def test_tiff_quarantine_contract_under_corruption():
     from hypothesis import strategies as st
 
     from norsk_historisk_avis_ocr_spark.stages.tiff import (
-        decode_tiff_pages, encode_ccitt_g4, encode_tiff_multi,
+        encode_ccitt_g4, encode_tiff_multi, tiff_pages,
     )
     pages = [_gradient(10 + k, 20) for k in range(3)]
     g4img = (_gradient(12, 40) < 128).astype(np.uint8)
@@ -775,8 +777,8 @@ def test_tiff_quarantine_contract_under_corruption():
         for pos, val in edits:
             data[pos % len(data)] = val
         try:
-            for _idx, arr in decode_tiff_pages(bytes(data)):
-                assert arr.ndim == 2
+            for decode in tiff_pages(bytes(data)):
+                assert decode().ndim == 2
         except ValueError:
             pass  # the quarantine contract
 

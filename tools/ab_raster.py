@@ -4,7 +4,7 @@ Round-4 VERDICT marked `raster_segment` weak: driver windows read
 217 -> 106 -> 62 pages/s across rounds 2 -> 3 -> 4 on an unchanged code
 path, and host-regime evidence (calib_sec) explained only part of it.
 This harness settles it: run the IDENTICAL leg (raster_pages_df
-limit=1024 -> parquet -> segment_png_pages, min-of-N timed no-op sinks)
+limit=1024 -> parquet -> segment_image_pages, min-of-N timed no-op sinks)
 against two repo checkouts, interleaved A/B/A/B... in ONE window, with a
 calib reading per run, and print one JSON line per run.
 
@@ -38,7 +38,7 @@ def calib():
     return round(time.time() - t0, 3)
 
 from norsk_historisk_avis_ocr_spark.plans import build_session
-from norsk_historisk_avis_ocr_spark.operators.raster import segment_png_pages
+from norsk_historisk_avis_ocr_spark.operators.raster import segment_image_pages
 from norsk_historisk_avis_ocr_spark.sources.rasters import raster_pages_df
 
 cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -55,7 +55,7 @@ try:
         .write.parquet(path)
     rasters = spark.read.parquet(path)
     n = rasters.count()
-    seg = segment_png_pages(rasters)
+    seg = segment_image_pages(rasters)
 
     def noop():
         seg.write.format("noop").mode("overwrite").save()
