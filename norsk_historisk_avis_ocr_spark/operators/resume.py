@@ -15,7 +15,9 @@ from functools import reduce
 
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType, IntegerType, LongType, StructField, StructType,
+)
 
 
 def resume_filter(pages: DataFrame, done_urls: DataFrame,
@@ -39,11 +41,17 @@ class _LineageAccParam(AccumulatorParam):
         return a
 
 
-# partition_id is LONG: the pre-accumulator lineage writer inferred int64
-# from collected Python ints, and parquet appends to an existing lineage
-# dir must not mix INT32 files into an INT64 column
-LINEAGE_SCHEMA = ("partition_id long, n_urls long, bytes_in long, "
-                  "n_blocks long, n_mastheads long")
+# Every lineage file has exactly this schema: parquet appends to one
+# lineage dir must not mix INT32 and INT64 files in a column. The counts
+# are LONG (the pre-accumulator writer inferred int64 from Python ints);
+# committed_at is INT epoch seconds, as the lineage files written so far
+# hold it, so a pass after 2038-01-19 fails to build its rows instead of
+# appending an INT64 file.
+LINEAGE_SCHEMA = StructType(
+    [StructField(c, LongType()) for c in (
+        "partition_id", "n_urls", "bytes_in", "n_blocks", "n_mastheads")]
+    + [StructField("committed_at", IntegerType(), False),
+       StructField("committed", BooleanType(), False)])
 
 
 def with_lineage_stats(results: DataFrame, acc) -> DataFrame:
@@ -77,10 +85,15 @@ def with_lineage_stats(results: DataFrame, acc) -> DataFrame:
     return results.mapInPandas(fn, schema=results.schema)
 
 
-def lineage_rows_from_stats(spark: SparkSession, stats: dict) -> DataFrame:
+def lineage_rows_from_stats(spark: SparkSession, stats: dict,
+                            committed_at: int) -> DataFrame:
+    """One pass's lineage rows, one per task partition, as an Arrow table:
+    Spark plans it as a ``LocalTableScan``, so writing them starts no
+    Python worker (a list of tuples would be a Python RDD)."""
+    import pyarrow as pa
+    rows = [(pid, *v, committed_at, True) for pid, v in sorted(stats.items())]
     return spark.createDataFrame(
-        [(int(pid), *(int(x) for x in v)) for pid, v in sorted(stats.items())],
-        LINEAGE_SCHEMA)
+        pa.table(list(zip(*rows)), names=LINEAGE_SCHEMA.names), LINEAGE_SCHEMA)
 
 
 def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
@@ -109,7 +122,14 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
     the batch, and the committed output table is never re-read either. The
     lineage rows (one per task partition, tiny) are created driver-side
     from the accumulator AFTER the commit succeeds, so a killed run never
-    records lineage for an uncommitted batch.
+    records lineage for an uncommitted batch. They are built as an Arrow
+    table in :data:`LINEAGE_SCHEMA` with the commit time (epoch seconds)
+    and ``committed=True`` filled in, a local relation that Spark writes
+    as one file without a Python worker.
+
+    The done set is read from each committed table's key column typed as
+    in ``pages`` (``pages.schema[key_col]``), so reading it starts no
+    schema-inference job.
 
     Quarantine (default html path only): the rows ``split_quarantine``
     rejects are counted by an ``Observation`` on the same write pass, and
@@ -125,8 +145,9 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
     if transform is not None and quarantine_path:
         raise ValueError("quarantine_path applies to the default html "
                          "path; a transform quarantines in-row")
-    done = [read_done_urls(spark, p, key_col)
-            for p in (out_path, quarantine_path) if p and has_committed(p)]
+    done = [read_done_urls(spark, p, pages.schema[key_col])
+            for p in (out_path, quarantine_path)
+            if p and has_committed(spark, p)]
     todo = resume_filter(pages, reduce(DataFrame.union, done),
                          key_col=key_col) if done else pages
     observed = Observation("quarantine") if quarantine_path else None
@@ -141,9 +162,8 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
     stats = acc.value
     n = sum(v[0] for v in stats.values())
     if n and lineage_path:
-        lineage = lineage_rows_from_stats(spark, stats) \
-            .withColumn("committed_at", F.lit(int(time.time())))
-        write_lineage(lineage, lineage_path)
+        write_lineage(lineage_rows_from_stats(spark, stats, int(time.time())),
+                      lineage_path)
     if observed is not None and observed.get["n_bad"]:
         bad.write.mode("append").parquet(quarantine_path)
     return n

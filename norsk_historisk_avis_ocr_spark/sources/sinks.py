@@ -12,10 +12,8 @@ used), and the next run anti-joins ``pages`` against the committed urls
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -35,22 +33,28 @@ def write_results(df: DataFrame, path: str) -> None:
     df.write.mode("append").option("compression", "zstd").parquet(path)
 
 
-def has_committed(path: str) -> bool:
-    """True once a commit has landed a parquet file under ``path``."""
-    return os.path.isdir(path) and any(
-        f.endswith(".parquet") for f in os.listdir(path))
+def has_committed(spark: SparkSession, path: str) -> bool:
+    """True once a commit has landed a parquet file under ``path``, looked
+    up through the path's Hadoop ``FileSystem`` so that ``file://``,
+    ``hdfs://`` and ``s3a://`` paths resolve as Spark's writer sees them."""
+    files = spark._jvm.org.apache.hadoop.fs.Path(path, "*.parquet")
+    fs = files.getFileSystem(
+        spark._jsparkSession.sessionState().newHadoopConf())
+    return bool(fs.globStatus(files))  # None when the path does not exist
 
 
 def read_done_urls(spark: SparkSession, path: str,
-                   key_col: str = "url") -> DataFrame:
-    """Keys already committed to the sink at ``path``, which must hold a
-    committed file (:func:`has_committed`)."""
-    return spark.read.parquet(path).select(key_col)
+                   key: StructField) -> DataFrame:
+    """The ``key`` column (e.g. ``pages.schema["url"]``) of the sink at
+    ``path``, which must hold a committed file (:func:`has_committed`).
+    The column is read with its declared type, so no schema-inference job
+    runs."""
+    return spark.read.schema(StructType([key])).parquet(path)
 
 
-def write_lineage(metrics_df: DataFrame, path: str) -> None:
-    """Per-partition lineage + extraction metrics (north rule): one row per
-    task partition with counts/bytes/elapsed, appended alongside results
-    as one file per pass."""
-    metrics_df.withColumn("committed", F.lit(True)).coalesce(1) \
-        .write.mode("append").option("compression", "zstd").parquet(path)
+def write_lineage(lineage: DataFrame, path: str) -> None:
+    """Append one pass's lineage rows (one per task partition, in
+    ``operators.resume.LINEAGE_SCHEMA``: counts, bytes, commit time) to
+    the lineage table alongside the results, as one file."""
+    lineage.coalesce(1).write.mode("append").option("compression", "zstd") \
+        .parquet(path)

@@ -5,6 +5,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField
 
 from norsk_historisk_avis_ocr_spark.operators import (
     extract_pages, resume_filter, split_quarantine,
@@ -101,6 +102,52 @@ def test_run_with_resume_idempotent(spark, sf_dir, tmp_path):
     pages.unpersist()
 
 
+def test_resume_into_file_uri_commits_once(spark, sf_dir, tmp_path):
+    """A ``file://`` output (the URI form spark-submit jobs pass, like
+    ``hdfs://``/``s3a://``) is found committed, so the second pass
+    anti-joins and commits nothing."""
+    from norsk_historisk_avis_ocr_spark.operators.resume import run_with_resume
+    out = f"file://{tmp_path}/results"
+    pages = pages_df(spark, sf_dir).limit(20).cache()
+    assert run_with_resume(spark, pages, out,
+                           lineage_path=f"file://{tmp_path}/lineage") == 20
+    assert run_with_resume(spark, pages, out) == 0
+    urls = spark.read.parquet(out).select("url")
+    assert urls.count() == urls.distinct().count() == 20
+    pages.unpersist()
+
+
+def test_lineage_file_schema(spark, tmp_path):
+    """Every lineage file carries the one declared schema (the parquet
+    types and nullability the lineage files already on disk hold), and a
+    commit time past INT range fails instead of writing an INT64 file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from norsk_historisk_avis_ocr_spark.operators.resume import (
+        lineage_rows_from_stats,
+    )
+    from norsk_historisk_avis_ocr_spark.sources.sinks import write_lineage
+    path = str(tmp_path / "lineage")
+    write_lineage(lineage_rows_from_stats(
+        spark, {3: [2, 70, 5, 1], 0: [1, 30, 2, 0]}, 1_700_000_000), path)
+    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(files) == 1
+    table = pq.read_table(os.path.join(path, files[0]))
+    assert table.schema.remove_metadata() == pa.schema(
+        [pa.field(c, pa.int64()) for c in (
+            "partition_id", "n_urls", "bytes_in", "n_blocks", "n_mastheads")]
+        + [pa.field("committed_at", pa.int32(), nullable=False),
+           pa.field("committed", pa.bool_(), nullable=False)])
+    assert table.to_pylist() == [
+        dict(partition_id=0, n_urls=1, bytes_in=30, n_blocks=2, n_mastheads=0,
+             committed_at=1_700_000_000, committed=True),
+        dict(partition_id=3, n_urls=2, bytes_in=70, n_blocks=5, n_mastheads=1,
+             committed_at=1_700_000_000, committed=True)]
+    with pytest.raises(pa.ArrowInvalid):
+        lineage_rows_from_stats(spark, {0: [1, 1, 1, 1]}, 2**31)
+
+
 def test_final_column_coalesce(spark, sf_dir):
     with_norm = extract_pages(pages_df(spark, sf_dir).limit(10))
     for r in with_norm.select("final", "normalized").collect():
@@ -191,14 +238,15 @@ def test_read_done_urls_edge_cases(spark, tmp_path):
     from norsk_historisk_avis_ocr_spark.sources.sinks import (
         has_committed, read_done_urls, write_results,
     )
-    assert not has_committed(str(tmp_path / "never_written"))
+    assert not has_committed(spark, str(tmp_path / "never_written"))
     empty_dir = tmp_path / "empty"
     empty_dir.mkdir()
-    assert not has_committed(str(empty_dir))
+    assert not has_committed(spark, str(empty_dir))
     out = str(tmp_path / "results")
     write_results(spark.createDataFrame([("u1", 1), ("u2", 2)],
                                         "url string, n int"), out)
-    assert has_committed(out)
-    done = read_done_urls(spark, out)
+    assert has_committed(spark, out)
+    assert has_committed(spark, f"file://{out}")
+    done = read_done_urls(spark, out, StructField("url", StringType()))
     assert done.columns == ["url"]
     assert sorted(r.url for r in done.collect()) == ["u1", "u2"]

@@ -100,6 +100,43 @@ def test_resume_joins_only_once_committed(spark, sf_dir, tmp_path):
     assert "LeftAnti" in resumed, resumed
 
 
+def test_lineage_write_is_a_local_relation(spark, sf_dir, tmp_path):
+    """The lineage rows are an Arrow local relation: their write plans a
+    LocalTableScan, not a scan of a Python RDD (whose partitions would
+    each start a Python worker)."""
+    from norsk_historisk_avis_ocr_spark.operators.resume import (
+        run_with_resume,
+    )
+    from norsk_historisk_avis_ocr_spark.sources import pages_df
+    lineage = str(tmp_path / "lineage")
+    assert run_with_resume(spark, pages_df(spark, sf_dir).limit(4),
+                           str(tmp_path / "results"),
+                           lineage_path=lineage) == 4
+    plan, = _write_plans(spark, lineage)
+    assert "LocalTableScan" in plan, plan
+    assert "Scan ExistingRDD" not in plan, plan
+
+
+def test_done_set_read_starts_no_job(spark, tmp_path):
+    """The done set is read with the key's declared type, so building it
+    runs no schema-inference job."""
+    from pyspark.sql.types import StringType, StructField
+
+    from norsk_historisk_avis_ocr_spark.sources.sinks import read_done_urls
+    out = str(tmp_path / "results")
+    spark.createDataFrame([("u1", 1)], "url string, n int").write.parquet(out)
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("done-set-read", "read_done_urls")
+        done = read_done_urls(spark, out, StructField("url", StringType()))
+        jobs = sc.statusTracker().getJobIdsForGroup("done-set-read")
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    assert list(jobs) == []
+    assert [r.url for r in done.collect()] == ["u1"]
+
+
 def test_window_ops_single_exchange(spark):
     df = spark.createDataFrame(
         [(1, "a", i) for i in range(5)],
