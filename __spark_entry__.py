@@ -15,9 +15,12 @@ DuckDB (``('0x' || substr(md5(x),1,14))::BIGINT``).
 
 from __future__ import annotations
 
+import base64
 import os
 import sys
 from collections.abc import Callable
+
+import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,7 +39,29 @@ from norsk_historisk_avis_ocr_spark.operators import quality as q  # noqa: E402
 from norsk_historisk_avis_ocr_spark.operators import similarity as sim  # noqa: E402
 from norsk_historisk_avis_ocr_spark.operators import skew as sk  # noqa: E402
 from norsk_historisk_avis_ocr_spark.operators import windows as w  # noqa: E402
+from norsk_historisk_avis_ocr_spark.operators.extract import (  # noqa: E402
+    explode_sections,
+)
+from norsk_historisk_avis_ocr_spark.operators.raster import (  # noqa: E402
+    render_debug_overlay, segment_image_pages,
+)
+from norsk_historisk_avis_ocr_spark.refexec import (  # noqa: E402
+    golden_geometry, golden_text,
+)
 from norsk_historisk_avis_ocr_spark.sources import pages_df  # noqa: E402
+from norsk_historisk_avis_ocr_spark.sources.rasters import (  # noqa: E402
+    jpeg_pages_df, pdf_pages_df, raster_pages_df, synth_color_page_array,
+    synth_page_array,
+)
+from norsk_historisk_avis_ocr_spark.stages.jpeg import (  # noqa: E402
+    decode_jpeg_gray, encode_jpeg_color, encode_jpeg_gray,
+)
+from norsk_historisk_avis_ocr_spark.stages.jpeg_progressive import (  # noqa: E402
+    encode_jpeg_progressive,
+)
+from norsk_historisk_avis_ocr_spark.stages.png import (  # noqa: E402
+    decode_png, encode_png,
+)
 
 
 def _ensure_worker_path(spark: SparkSession) -> None:
@@ -99,6 +124,56 @@ def _seed_patterns(docs: DataFrame) -> DataFrame:
              .when(F.col("doc_id") % 5 == 0, F.lit(_SEED_B))
              .otherwise(F.lit("")))
     return docs.withColumn("text", F.concat(F.col("text"), seed))
+
+
+def _media_docs(spark: SparkSession, sf: str) -> DataFrame:
+    """The media rows' corpus: ``documents.text`` as an opaque binary
+    ``payload`` keyed by the string ``doc_key``."""
+    return _t(spark, sf, "documents").select(
+        F.col("doc_id").cast("string").alias("doc_key"),
+        F.encode("text", "UTF-8").alias("payload"))
+
+
+# Sample cap of each self-verifying row (None: every document). The query
+# passes its cap as the probe's ``limit`` and ``oracle_sql`` generates the
+# row's constant oracle from the same entry, so the two cannot drift.
+_VERIFIED_CAPS: dict[str, int | None] = {
+    "extract_verified": None,
+    "raster_verified": 40,
+    "raster_verified_jpeg": 16,
+    "raster_verified_pdf": 16,
+    "overlay_verified": 24,
+    "vision_payloads_verified": 12,
+    # one check-count per url (ord-0 row), every section row verified
+    "sections_verified": None,
+}
+
+
+def _mismatch_counts(df: DataFrame, bad: Callable,
+                     counted: Callable | None = None) -> DataFrame:
+    """The ``(n_checked, n_mismatch)`` row of a self-verifying query:
+    ``bad(row)`` runs on every row of ``df`` in an Arrow stage and flags a
+    mismatch; ``counted(row)`` (default: every row) picks the rows that
+    add to ``n_checked``.
+
+    ``bad`` and ``counted`` run in Python workers, which import the
+    package but not this module, so they must ship by value: define them
+    inside ``queries()`` or take them from the package. cloudpickle ships
+    a top-level name of this module by reference."""
+    def vfn(batches):
+        import pandas as pd
+        for pdf in batches:
+            n = n_bad = 0
+            for row in pdf.itertuples(index=False):
+                if counted is None or counted(row):
+                    n += 1
+                if bad(row):
+                    n_bad += 1
+            yield pd.DataFrame({"n": [n], "bad": [n_bad]})
+
+    flags = df.mapInPandas(vfn, schema="n long, bad long")
+    return flags.agg(F.sum("n").alias("n_checked"),
+                     F.sum("bad").alias("n_mismatch"))
 
 
 # ---------------------------------------------------------------------------
@@ -170,6 +245,30 @@ def _salted_hot_keys(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    def as_tuple(box):  # geometry struct → the goldens' (x0, y0, x1, y1)
+        if box is None:
+            return None
+        return (box["x0"], box["y0"], box["x1"], box["y1"])
+
+    def raster_mismatch_counts(spark, sf, name, source, decoded_page):
+        """``segment_image_pages`` over ``name``'s sample of ``source``;
+        a page mismatches unless its title and column boxes equal
+        ``refexec.golden_geometry(decoded_page(page_id))``, the reference's
+        ``_split_columns`` on the pixels the in-tree decoder must produce.
+        A quarantined page counts as a mismatch."""
+        _ensure_worker_path(spark)
+        pages = source(spark, sf, limit=_VERIFIED_CAPS[name], partitions=8)
+        geo = segment_image_pages(pages)
+
+        def bad(row):
+            if row.decode_error is not None:
+                return True
+            want_title, want_cols = golden_geometry(decoded_page(row.page_id))
+            return (as_tuple(row.title_box) != want_title
+                    or [as_tuple(b) for b in row.column_boxes] != want_cols)
+
+        return _mismatch_counts(geo, bad)
+
     def extract_pipeline(spark, sf):
         _ensure_worker_path(spark)
         res = extract_pages(pages_df(spark, sf))
@@ -187,10 +286,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         16-bit digest slice, unchanged by the positive norm) because the
         driver's canonicalizer cannot sort list cells."""
         _ensure_worker_path(spark)
-        docs = _t(spark, sf, "documents").select(
-            F.col("doc_id").cast("string").alias("doc_key"),
-            F.encode("text", "UTF-8").alias("payload"))
-        feats = mm.media_features(docs, url_col="doc_key",
+        feats = mm.media_features(_media_docs(spark, sf), url_col="doc_key",
                                   bytes_col="payload")
         return feats.select(
             F.col("url").alias("doc_key"), "media_type", "n_bytes",
@@ -212,12 +308,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pipeline properties — the bench runs this path at 1,024 pages and
         the operator itself is map-only."""
         _ensure_worker_path(spark)
-        from norsk_historisk_avis_ocr_spark.operators.raster import (
-            segment_image_pages,
-        )
-        from norsk_historisk_avis_ocr_spark.sources.rasters import (
-            raster_pages_df,
-        )
         pages = raster_pages_df(spark, sf, limit=80, partitions=8)
         geo = segment_image_pages(pages)
         def _n(col):  # size(NULL) is -1 by default — keep NULLs NULL
@@ -248,25 +338,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         truth = pages.select("url", "planted_header", "planted_columns")
         joined = res.join(truth, "url")
 
-        def vfn(batches):
-            import pandas as pd
+        def bad(row):
+            want_c, want_t = golden_text(row.planted_header,
+                                         row.planted_columns)
+            return row.combined != want_c or row.transcribed != want_t
 
-            from norsk_historisk_avis_ocr_spark.refexec import golden_text
-            n = bad = 0
-            for pdf in batches:
-                for combined, transcribed, header, cols in zip(
-                        pdf["combined"], pdf["transcribed"],
-                        pdf["planted_header"], pdf["planted_columns"]):
-                    want_c, want_t = golden_text(header, cols)
-                    n += 1
-                    if combined != want_c or transcribed != want_t:
-                        bad += 1
-                yield pd.DataFrame({"n": [n], "bad": [bad]})
-                n = bad = 0
-
-        flags = joined.mapInPandas(vfn, schema="n long, bad long")
-        return flags.agg(F.sum("n").alias("n_checked"),
-                         F.sum("bad").alias("n_mismatch"))
+        return _mismatch_counts(joined, bad)
 
     def raster_verified(spark, sf):
         """Self-verifying contract row for the raster L1-L4 pipeline: run
@@ -276,47 +353,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ``_split_columns`` (``refexec.golden_geometry``) to compare title
         and column crop boxes exactly. One ``(n_checked, n_mismatch)`` row,
         constant oracle: geometry drift becomes a driver-gate FAIL."""
-        _ensure_worker_path(spark)
-        from norsk_historisk_avis_ocr_spark.operators.raster import (
-            segment_image_pages,
-        )
-        from norsk_historisk_avis_ocr_spark.sources.rasters import (
-            raster_pages_df,
-        )
-        pages = raster_pages_df(spark, sf, limit=40, partitions=8)
-        geo = segment_image_pages(pages)
-
-        def vfn(batches):
-            import pandas as pd
-
-            from norsk_historisk_avis_ocr_spark.refexec import golden_geometry
-            from norsk_historisk_avis_ocr_spark.sources.rasters import (
-                synth_page_array,
-            )
-
-            def as_tuple(box):
-                if box is None:
-                    return None
-                return (box["x0"], box["y0"], box["x1"], box["y1"])
-
-            for pdf in batches:
-                n = bad = 0
-                for row in pdf.itertuples(index=False):
-                    n += 1
-                    if row.decode_error is not None:
-                        bad += 1
-                        continue
-                    want_title, want_cols = golden_geometry(
-                        synth_page_array(row.page_id))
-                    got_cols = [as_tuple(b) for b in row.column_boxes]
-                    if (as_tuple(row.title_box) != want_title
-                            or got_cols != want_cols):
-                        bad += 1
-                yield pd.DataFrame({"n": [n], "bad": [bad]})
-
-        flags = geo.mapInPandas(vfn, schema="n long, bad long")
-        return flags.agg(F.sum("n").alias("n_checked"),
-                         F.sum("bad").alias("n_mismatch"))
+        return raster_mismatch_counts(spark, sf, "raster_verified",
+                                      raster_pages_df, synth_page_array)
 
     def raster_verified_jpeg(spark, sf):
         """JPEG leg of the self-verifying raster row: pages alternate by
@@ -330,66 +368,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         construction regardless of JPEG loss. 700×520 pages keep the
         contract probe fast while still exercising dividers, masthead
         gaps, and subdivision."""
-        _ensure_worker_path(spark)
-        from norsk_historisk_avis_ocr_spark.operators.raster import (
-            segment_image_pages,
-        )
-        from norsk_historisk_avis_ocr_spark.sources.rasters import (
-            jpeg_pages_df,
-        )
-        pages = jpeg_pages_df(spark, sf, limit=16, partitions=8)
-        geo = segment_image_pages(pages)
+        def decoded_page(page_id):
+            doc_id = int(page_id.split("-", 1)[1])
+            arm = doc_id % 3
+            if arm == 0:
+                return decode_jpeg_gray(encode_jpeg_gray(
+                    synth_page_array(page_id, width=700, height=520),
+                    quality=97))
+            if arm == 1:
+                return decode_jpeg_gray(encode_jpeg_color(
+                    synth_color_page_array(page_id, width=700, height=520),
+                    quality=97, sampling=(2, 2)))
+            return decode_jpeg_gray(encode_jpeg_progressive(
+                synth_page_array(page_id, width=700, height=520),
+                quality=97))
 
-        def vfn(batches):
-            import pandas as pd
-
-            from norsk_historisk_avis_ocr_spark.refexec import golden_geometry
-            from norsk_historisk_avis_ocr_spark.sources.rasters import (
-                synth_color_page_array, synth_page_array,
-            )
-            from norsk_historisk_avis_ocr_spark.stages.jpeg import (
-                decode_jpeg_gray, encode_jpeg_color, encode_jpeg_gray,
-            )
-            from norsk_historisk_avis_ocr_spark.stages.jpeg_progressive \
-                import encode_jpeg_progressive
-
-            def as_tuple(box):
-                if box is None:
-                    return None
-                return (box["x0"], box["y0"], box["x1"], box["y1"])
-
-            for pdf in batches:
-                n = bad = 0
-                for row in pdf.itertuples(index=False):
-                    n += 1
-                    if row.decode_error is not None:
-                        bad += 1
-                        continue
-                    doc_id = int(row.page_id.split("-", 1)[1])
-                    arm = doc_id % 3
-                    if arm == 0:
-                        decoded = decode_jpeg_gray(encode_jpeg_gray(
-                            synth_page_array(row.page_id, width=700,
-                                             height=520), quality=97))
-                    elif arm == 1:
-                        decoded = decode_jpeg_gray(encode_jpeg_color(
-                            synth_color_page_array(row.page_id, width=700,
-                                                   height=520),
-                            quality=97, sampling=(2, 2)))
-                    else:
-                        decoded = decode_jpeg_gray(encode_jpeg_progressive(
-                            synth_page_array(row.page_id, width=700,
-                                             height=520), quality=97))
-                    want_title, want_cols = golden_geometry(decoded)
-                    got_cols = [as_tuple(b) for b in row.column_boxes]
-                    if (as_tuple(row.title_box) != want_title
-                            or got_cols != want_cols):
-                        bad += 1
-                yield pd.DataFrame({"n": [n], "bad": [bad]})
-
-        flags = geo.mapInPandas(vfn, schema="n long, bad long")
-        return flags.agg(F.sum("n").alias("n_checked"),
-                         F.sum("bad").alias("n_mismatch"))
+        return raster_mismatch_counts(spark, sf, "raster_verified_jpeg",
+                                      jpeg_pages_df, decoded_page)
 
     def raster_verified_pdf(spark, sf):
         """PDF leg of the self-verifying raster row — the reference's
@@ -406,62 +401,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         decoded pixels — exact by construction for both arms (the flate
         arm is lossless; the DCT arm re-derives the identical JPEG
         round-trip)."""
-        _ensure_worker_path(spark)
-        from norsk_historisk_avis_ocr_spark.operators.raster import (
-            segment_image_pages,
-        )
-        from norsk_historisk_avis_ocr_spark.sources.rasters import (
-            pdf_pages_df,
-        )
-        pages = pdf_pages_df(spark, sf, limit=16, partitions=8)
-        geo = segment_image_pages(pages)
+        def decoded_page(page_id):
+            doc_id = int(page_id.split("-", 1)[1])
+            arr = synth_page_array(page_id, width=700, height=520)
+            if doc_id % 8 == 3:
+                # CCITT G4 arm: bilevel threshold, ink -> 0
+                return np.where(arr < 128, 0, 255).astype(np.uint8)
+            if doc_id % 2 == 0:
+                return decode_jpeg_gray(encode_jpeg_gray(arr, quality=97))
+            return arr
 
-        def vfn(batches):
-            import pandas as pd
-
-            from norsk_historisk_avis_ocr_spark.refexec import golden_geometry
-            from norsk_historisk_avis_ocr_spark.sources.rasters import (
-                synth_page_array,
-            )
-            from norsk_historisk_avis_ocr_spark.stages.jpeg import (
-                decode_jpeg_gray, encode_jpeg_gray,
-            )
-
-            def as_tuple(box):
-                if box is None:
-                    return None
-                return (box["x0"], box["y0"], box["x1"], box["y1"])
-
-            for pdf in batches:
-                n = bad = 0
-                for row in pdf.itertuples(index=False):
-                    n += 1
-                    if row.decode_error is not None:
-                        bad += 1
-                        continue
-                    doc_id = int(row.page_id.split("-", 1)[1])
-                    arr = synth_page_array(row.page_id, width=700,
-                                           height=520)
-                    if doc_id % 8 == 3:
-                        # CCITT G4 arm: bilevel threshold, ink -> 0
-                        import numpy as _np
-                        decoded = _np.where(arr < 128, 0, 255) \
-                            .astype(_np.uint8)
-                    elif doc_id % 2 == 0:
-                        decoded = decode_jpeg_gray(
-                            encode_jpeg_gray(arr, quality=97))
-                    else:
-                        decoded = arr
-                    want_title, want_cols = golden_geometry(decoded)
-                    got_cols = [as_tuple(b) for b in row.column_boxes]
-                    if (as_tuple(row.title_box) != want_title
-                            or got_cols != want_cols):
-                        bad += 1
-                yield pd.DataFrame({"n": [n], "bad": [bad]})
-
-        flags = geo.mapInPandas(vfn, schema="n long, bad long")
-        return flags.agg(F.sum("n").alias("n_checked"),
-                         F.sum("bad").alias("n_mismatch"))
+        return raster_mismatch_counts(spark, sf, "raster_verified_pdf",
+                                      pdf_pages_df, decoded_page)
 
     def overlay_verified(spark, sf):
         """Self-verifying row for the S8 annotated debug rasters
@@ -476,66 +427,35 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         marker color (drawn last, so never overdrawn). One
         ``(n_checked, n_mismatch)`` row against a constant oracle."""
         _ensure_worker_path(spark)
-        from norsk_historisk_avis_ocr_spark.operators.raster import (
-            segment_image_pages,
-        )
-        from norsk_historisk_avis_ocr_spark.sources.rasters import (
-            raster_pages_df,
-        )
-        pages = raster_pages_df(spark, sf, limit=24, partitions=8)
+        pages = raster_pages_df(spark, sf,
+                                limit=_VERIFIED_CAPS["overlay_verified"],
+                                partitions=8)
         geo = segment_image_pages(pages, debug_overlay=True)
 
-        def vfn(batches):
-            import numpy as np
-            import pandas as pd
+        def bad(row):
+            if row.decode_error is not None or row.debug_png is None:
+                return True
+            gray = synth_page_array(row.page_id)
+            geo_dict = {
+                "boundaries": list(row.boundaries),
+                "body_top": list(row.body_top),
+                "title_box": as_tuple(row.title_box),
+                "column_boxes": [as_tuple(b) for b in row.column_boxes],
+            }
+            got = bytes(row.debug_png)
+            if got != render_debug_overlay(gray, geo_dict):
+                return True
+            rgb = decode_png(got)
+            if rgb.shape != gray.shape + (3,):
+                return True
+            if len(row.body_top):
+                orange = ((rgb[:, :, 0] == 255)
+                          & (rgb[:, :, 1] == 160)
+                          & (rgb[:, :, 2] == 0))
+                return not bool(np.any(orange))
+            return False
 
-            from norsk_historisk_avis_ocr_spark.operators.raster import (
-                render_debug_overlay,
-            )
-            from norsk_historisk_avis_ocr_spark.sources.rasters import (
-                synth_page_array,
-            )
-            from norsk_historisk_avis_ocr_spark.stages.png import decode_png
-
-            def as_tuple(box):
-                if box is None:
-                    return None
-                return (box["x0"], box["y0"], box["x1"], box["y1"])
-
-            for pdf in batches:
-                n = bad = 0
-                for row in pdf.itertuples(index=False):
-                    n += 1
-                    if row.decode_error is not None or row.debug_png is None:
-                        bad += 1
-                        continue
-                    gray = synth_page_array(row.page_id)
-                    geo_dict = {
-                        "boundaries": list(row.boundaries),
-                        "body_top": list(row.body_top),
-                        "title_box": as_tuple(row.title_box),
-                        "column_boxes": [as_tuple(b)
-                                         for b in row.column_boxes],
-                    }
-                    got = bytes(row.debug_png)
-                    if got != render_debug_overlay(gray, geo_dict):
-                        bad += 1
-                        continue
-                    rgb = decode_png(got)
-                    if rgb.shape != gray.shape + (3,):
-                        bad += 1
-                        continue
-                    if len(row.body_top):
-                        orange = ((rgb[:, :, 0] == 255)
-                                  & (rgb[:, :, 1] == 160)
-                                  & (rgb[:, :, 2] == 0))
-                        if not bool(np.any(orange)):
-                            bad += 1
-                yield pd.DataFrame({"n": [n], "bad": [bad]})
-
-        flags = geo.mapInPandas(vfn, schema="n long, bad long")
-        return flags.agg(F.sum("n").alias("n_checked"),
-                         F.sum("bad").alias("n_mismatch"))
+        return _mismatch_counts(geo, bad)
 
     def vision_payloads_verified(spark, sf):
         """Self-verifying row for the X3 prep/encode budget loop
@@ -549,11 +469,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         def gen(batches):
             import pandas as pd
-
-            from norsk_historisk_avis_ocr_spark.sources.rasters import (
-                synth_page_array,
-            )
-            from norsk_historisk_avis_ocr_spark.stages.png import encode_png
             for pdf in batches:
                 rows = []
                 for doc_id in pdf["doc_id"]:
@@ -563,42 +478,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 yield pd.DataFrame(rows)
 
         ids = _t(spark, sf, "documents").select("doc_id") \
-            .orderBy("doc_id").limit(12).repartition(4, "doc_id")
+            .orderBy("doc_id") \
+            .limit(_VERIFIED_CAPS["vision_payloads_verified"]) \
+            .repartition(4, "doc_id")
         pages = ids.mapInPandas(gen, schema="page_id string, png binary")
         payloads = mm.vision_payloads(pages, url_col="page_id",
                                       max_bytes=30000)
 
-        def vfn(batches):
-            import base64
+        def bad(row):
+            if row.prep_error is not None:
+                return True
+            data = base64.standard_b64decode(row.payload_b64)
+            decoded = decode_jpeg_gray(data)
+            return not (len(data) <= 30000
+                        and len(data) == row.n_bytes
+                        and decoded.shape == (row.height, row.width)
+                        and row.width <= 400 and row.height <= 300
+                        and row.media_type == "image/jpeg"
+                        and 1 <= row.quality <= 95
+                        and row.n_attempts >= 1)
 
-            import pandas as pd
-
-            from norsk_historisk_avis_ocr_spark.stages.jpeg import (
-                decode_jpeg_gray,
-            )
-            for pdf in batches:
-                n = bad = 0
-                for row in pdf.itertuples(index=False):
-                    n += 1
-                    if row.prep_error is not None:
-                        bad += 1
-                        continue
-                    data = base64.standard_b64decode(row.payload_b64)
-                    decoded = decode_jpeg_gray(data)
-                    ok = (len(data) <= 30000
-                          and len(data) == row.n_bytes
-                          and decoded.shape == (row.height, row.width)
-                          and row.width <= 400 and row.height <= 300
-                          and row.media_type == "image/jpeg"
-                          and 1 <= row.quality <= 95
-                          and row.n_attempts >= 1)
-                    if not ok:
-                        bad += 1
-                yield pd.DataFrame({"n": [n], "bad": [bad]})
-
-        flags = payloads.mapInPandas(vfn, schema="n long, bad long")
-        return flags.agg(F.sum("n").alias("n_checked"),
-                         F.sum("bad").alias("n_mismatch"))
+        return _mismatch_counts(payloads, bad)
 
     def sections_verified(spark, sf):
         """Self-verifying row for the per-section sink (S6,
@@ -607,36 +507,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the header when present, and per-url section counts must match the
         spans column. (n_checked, n_mismatch) vs a constant oracle."""
         _ensure_worker_path(spark)
-        from norsk_historisk_avis_ocr_spark.operators.extract import (
-            explode_sections,
-        )
         res = extract_pages(pages_df(spark, sf))
         sections = explode_sections(res)
         joined = sections.join(
             res.select("url", "combined", "header",
                        F.size("spans").alias("n_spans")), "url")
 
-        def vfn(batches):
-            import pandas as pd
-            for pdf in batches:
-                n = bad = 0
-                for row in pdf.itertuples(index=False):
-                    if row.ord == 0:
-                        n += 1  # one count per url (every url has ord 0),
-                        # so n_checked is corpus-size-derivable in SQL;
-                        # EVERY section row is still checked below
-                    data = row.combined.encode("utf-8")
-                    ok = (data[row.start:row.end].decode("utf-8") == row.text
-                          and 0 <= row.ord < row.n_spans)
-                    if row.section == "header":
-                        ok = ok and row.ord == 0 and row.text == row.header
-                    if not ok:
-                        bad += 1
-                yield pd.DataFrame({"n": [n], "bad": [bad]})
+        def bad(row):
+            data = row.combined.encode("utf-8")
+            ok = (data[row.start:row.end].decode("utf-8") == row.text
+                  and 0 <= row.ord < row.n_spans)
+            if row.section == "header":
+                ok = ok and row.ord == 0 and row.text == row.header
+            return not ok
 
-        flags = joined.mapInPandas(vfn, schema="n long, bad long")
-        return flags.agg(F.sum("n").alias("n_checked"),
-                         F.sum("bad").alias("n_mismatch"))
+        # one count per url (every url has ord 0), so n_checked is
+        # corpus-size-derivable in SQL; EVERY section row is still checked
+        return _mismatch_counts(joined, bad, counted=lambda row: row.ord == 0)
 
     def multimodal_frames(spark, sf):
         """Video frame-sampling plumbing (1→N mapInPandas expansion) over
@@ -645,11 +532,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         digest column is projected out — binary concat of NUL bytes is not
         portable SQL)."""
         _ensure_worker_path(spark)
-        docs = _t(spark, sf, "documents").select(
-            F.col("doc_id").cast("string").alias("doc_key"),
-            F.encode("text", "UTF-8").alias("payload"))
-        frames = mm.frame_samples(docs, every_ms=250, url_col="doc_key",
-                                  bytes_col="payload")
+        frames = mm.frame_samples(_media_docs(spark, sf), every_ms=250,
+                                  url_col="doc_key", bytes_col="payload")
         return frames.select(
             F.col("url").alias("doc_key"),
             F.col("frame_idx").cast("long").alias("frame_idx"),
@@ -660,11 +544,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         to max_side=512 — the geometry math is exact-integer-reproducible
         in SQL (identical fp expression tree for the scale factor)."""
         _ensure_worker_path(spark)
-        docs = _t(spark, sf, "documents").select(
-            F.col("doc_id").cast("string").alias("doc_key"),
-            F.encode("text", "UTF-8").alias("payload"))
-        resized = mm.resize_media(docs, max_side=512, url_col="doc_key",
-                                  bytes_col="payload")
+        resized = mm.resize_media(_media_docs(spark, sf), max_side=512,
+                                  url_col="doc_key", bytes_col="payload")
         return resized.select(
             F.col("url").alias("doc_key"),
             F.col("width").cast("long").alias("width"),
@@ -1120,38 +1001,18 @@ s AS (
 )
 """
 
+    def verified_oracle(cap: int | None) -> str:
+        n = "COUNT(*)" if cap is None else f"LEAST(COUNT(*), {cap})"
+        return (f"SELECT {n} AS n_checked, CAST(0 AS BIGINT) AS n_mismatch "
+                "FROM documents")
+
     return {
         # self-verifying pipeline rows: the Spark side compares its own
         # output against the EXECUTED reference inside the UDF and reports
         # (n_checked, n_mismatch); the oracle only has to assert the corpus
         # size and zero mismatches — any byte/geometry drift hash-FAILs
-        "extract_verified": """
-SELECT COUNT(*) AS n_checked, CAST(0 AS BIGINT) AS n_mismatch FROM documents
-""",
-        "raster_verified": """
-SELECT LEAST(COUNT(*), 40) AS n_checked, CAST(0 AS BIGINT) AS n_mismatch
-FROM documents
-""",
-        "raster_verified_jpeg": """
-SELECT LEAST(COUNT(*), 16) AS n_checked, CAST(0 AS BIGINT) AS n_mismatch
-FROM documents
-""",
-        "raster_verified_pdf": """
-SELECT LEAST(COUNT(*), 16) AS n_checked, CAST(0 AS BIGINT) AS n_mismatch
-FROM documents
-""",
-        "overlay_verified": """
-SELECT LEAST(COUNT(*), 24) AS n_checked, CAST(0 AS BIGINT) AS n_mismatch
-FROM documents
-""",
-        "vision_payloads_verified": """
-SELECT LEAST(COUNT(*), 12) AS n_checked, CAST(0 AS BIGINT) AS n_mismatch
-FROM documents
-""",
-        # one check-count per url (ord-0 row), every section row verified
-        "sections_verified": """
-SELECT COUNT(*) AS n_checked, CAST(0 AS BIGINT) AS n_mismatch FROM documents
-""",
+        **{name: verified_oracle(cap)
+           for name, cap in _VERIFIED_CAPS.items()},
         # stub-deterministic 1→N frame expansion: n_frames and offsets
         # derive from sha256(text) byte 2 (hex chars 5-6), every_ms=250
         "multimodal_frames": """

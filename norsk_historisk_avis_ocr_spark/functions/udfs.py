@@ -57,7 +57,6 @@ _HYPHEN_BREAK = re.compile(r"-\n\s*")
 
 
 def extract_one(url: str, html: bytes, normalizer: OrthographyNormalizer | None,
-                with_diff: bool = True,
                 wants: frozenset | None = None):
     """Full per-page extraction: the Spark analog of
     ``TesseractEngine.process_file`` (``engines/tesseract_engine.py:113-192``)
@@ -66,9 +65,9 @@ def extract_one(url: str, html: bytes, normalizer: OrthographyNormalizer | None,
     ``wants``: the result fields the caller will keep (None = all). Fields
     outside the set are returned as None and their computation skipped —
     the in-UDF projection lever: a ``final``+``spans`` consumer never pays
-    for metrics counting or the combined join (the word diff is separately
-    gated by ``with_diff``). Values of computed fields are identical
-    regardless of ``wants``.
+    for metrics counting or the combined join, and the word diff runs only
+    when ``correction_changes`` is wanted. Values of computed fields are
+    identical regardless of ``wants``.
     """
     header_raw, column_raws = extract_sections(html)
 
@@ -96,7 +95,7 @@ def extract_one(url: str, html: bytes, normalizer: OrthographyNormalizer | None,
         # the word-level change report mirrors correction-changes.txt
         # (``tesseract_claude_engine.py:126-133``)
         normalized = normalizer.normalize_framed(transcribed)
-        if with_diff:
+        if all_fields or "correction_changes" in wants:
             changes = readable_diff(transcribed[:-1], normalized[:-1])
 
     metrics = None
@@ -161,7 +160,6 @@ def extract_map_fn(normalize_table: tuple[dict, set] | None,
     set; the batch must then carry a ``lang`` column.
     """
     fields = [f.name for f in projected_schema(output_columns).fields]
-    need_diff = "correction_changes" in fields
     wants = frozenset(fields)
 
     def fn(batches):
@@ -180,13 +178,12 @@ def extract_map_fn(normalize_table: tuple[dict, set] | None,
                         "column")
                 rows = [extract_one(u, h, normalizer
                                     if lg in normalize_langs else None,
-                                    with_diff=need_diff, wants=wants)
+                                    wants=wants)
                         for u, h, lg in zip(pdf["url"].tolist(),
                                             pdf["html"].tolist(),
                                             pdf["lang"].tolist())]
             else:
-                rows = [extract_one(u, h, normalizer, with_diff=need_diff,
-                                    wants=wants)
+                rows = [extract_one(u, h, normalizer, wants=wants)
                         for u, h in zip(pdf["url"].tolist(),
                                         pdf["html"].tolist())]
             # column-wise assembly: pd.DataFrame(list-of-dicts) re-infers

@@ -20,7 +20,6 @@ class EngineConfig:
     normalize: bool = True
     normalize_langs: frozenset[str] | None = None
     diff_changes: bool = True
-    max_html_bytes: int = 16 * 1024 * 1024
 
     @property
     def name(self) -> str:

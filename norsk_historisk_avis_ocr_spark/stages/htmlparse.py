@@ -356,13 +356,12 @@ def classify_blocks(blocks: list[Block]) -> list[tuple[str, Block]]:
     return labeled
 
 
-def extract_sections(html: bytes | str,
-                     engine: str = "fast") -> tuple[str | None, list[str]]:
+def extract_sections(html: bytes | str) -> tuple[str | None, list[str]]:
     """Page bytes → (masthead text or None, raw column texts in reading
     order). The single-column / no-content fallback mirrors
     ``engines/_columns.py:521-522``: a page with no recognizable column
     blocks yields one column holding the page's whole visible text."""
-    blocks = parse_blocks(html, engine=engine)
+    blocks = parse_blocks(html)
     labeled = classify_blocks(blocks)
     header = None
     columns: list[str] = []

@@ -23,18 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_pages_stream(spark: SparkSession, path: str,
-                      max_files_per_trigger: int | None = None) -> DataFrame:
+def read_pages_stream(spark: SparkSession, path: str) -> DataFrame:
     """Streaming scan of a pages directory (parquet file source). File
     sources require an explicit schema — reuses the batch generator's
     ``PAGES_SCHEMA`` (single source of truth: a column added there reaches
-    the incremental path too); ``maxFilesPerTrigger`` bounds per-micro-batch
-    work on a large backlog."""
+    the incremental path too)."""
     from ..sources.pages import PAGES_SCHEMA
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return spark.readStream.schema(PAGES_SCHEMA).parquet(path)
 
 
 def run_incremental(spark: SparkSession, in_path: str, out_path: str,

@@ -1,6 +1,14 @@
 """Driver-contract sanity: entry() smoke + queries/oracle key alignment."""
 
+import glob
+import os
+import pickle
+import subprocess
+import sys
+
 import __spark_entry__ as entrymod
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_entry_returns_rows(spark):
@@ -65,3 +73,72 @@ def test_registry_fits_driver_gate_window():
     fold new variants into tagged unions instead of new keys (see
     STATUS.md 'Driver-gate query budget')."""
     assert len(entrymod.queries()) <= 50
+
+
+def test_mismatch_counts_sums_every_batch_and_partition(spark):
+    """The self-verifying rows' scaffold adds up one count row per Arrow
+    batch: a 600-row partition (three batches of at most 256 rows) and an
+    empty partition give exactly the counts of the 600 rows."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "256")
+    try:
+        # two range partitions, 0..599 and 600..1199; the filter empties
+        # the second
+        df = spark.range(0, 1200, 1, 2).where("id < 600")
+        assert df.rdd.getNumPartitions() == 2
+        bad = lambda row: row.id % 7 == 0  # noqa: E731
+        every = entrymod._mismatch_counts(df, bad).collect()
+        some = entrymod._mismatch_counts(
+            df, bad, counted=lambda row: row.id % 3 != 0).collect()
+    finally:
+        spark.conf.set(key, old)
+    # ids 0..599: 86 multiples of 7, 400 ids that are not multiples of 3
+    assert [tuple(r) for r in every] == [(600, 86)]
+    assert [tuple(r) for r in some] == [(400, 86)]
+
+
+def test_verified_rows_ship_by_value(spark, sf_dir, tmp_path, monkeypatch):
+    """Every function a ``*_verified`` query passes to ``mapInPandas``
+    unpickles where only the package is importable, as in a Python worker
+    started outside ``build_session``. cloudpickle ships a top-level name
+    of ``__spark_entry__`` by reference, which such a worker cannot
+    import (ModuleNotFoundError)."""
+    from pyspark import cloudpickle
+    from pyspark.find_spark_home import _find_spark_home
+
+    # Spark 4's classic DataFrame overrides pyspark.sql.DataFrame's method
+    cls = type(spark.range(1))
+    original = cls.mapInPandas
+    shipped = []
+
+    def capture(self, func, *args, **kwargs):
+        shipped.append(func)
+        return original(self, func, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "mapInPandas", capture)
+    verified = [fn for name, fn in entrymod.queries().items()
+                if "_verified" in name]
+    for fn in verified:
+        fn(spark, sf_dir)  # plan only
+    monkeypatch.undo()
+    assert len(verified) == 7 and len(shipped) >= len(verified)
+
+    pkg = "norsk_historisk_avis_ocr_spark"
+    (tmp_path / pkg).symlink_to(os.path.join(REPO, pkg))
+    zips = sorted(glob.glob(os.path.join(_find_spark_home(), "python", "lib",
+                                         "*.zip")))
+    blobs = [(f.__qualname__, cloudpickle.dumps(f)) for f in shipped]
+    loader = (
+        "import pickle, sys\n"
+        "for name, blob in pickle.load(sys.stdin.buffer):\n"
+        "    try:\n"
+        "        pickle.loads(blob)\n"
+        "    except Exception as e:\n"
+        "        print(name, type(e).__name__, e)\n")
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([str(tmp_path)] + zips))
+    out = subprocess.run([sys.executable, "-c", loader],
+                         input=pickle.dumps(blobs), cwd=tmp_path, env=env,
+                         capture_output=True, timeout=300)
+    assert out.returncode == 0, out.stderr.decode()[-2000:]
+    assert out.stdout.decode() == ""

@@ -20,7 +20,7 @@ import pyarrow.parquet as pq
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
 from norsk_historisk_avis_ocr_spark.functions.udfs import (  # noqa: E402
-    _HYPHEN_BREAK, _SHORT_LINE, extract_one,
+    extract_one,
 )
 from norsk_historisk_avis_ocr_spark.sources.pages import build_page  # noqa: E402
 from norsk_historisk_avis_ocr_spark.stages.htmlparse import (  # noqa: E402
@@ -76,10 +76,11 @@ def stage_breakdown(pages, normalizer):
         changes = readable_diff(transcribed[:-1], normalized[:-1])
         t7 = time.perf_counter(); stages["diff"] += t7 - t6
 
+        # the same counters as extract_one
         raws = ([header_raw] if header_raw is not None else []) + column_raws
         n_dropped = sum(1 for raw in raws for ln in raw.split("\n")
-                        if _SHORT_LINE.match(ln))
-        n_hyphens = sum(len(_HYPHEN_BREAK.findall(s)) for s in sections)
+                        if 0 < len(ln.strip()) <= 2)
+        n_hyphens = sum(s.count("-\n") for s in sections)
         assert n_dropped >= 0 and n_hyphens >= 0 and combined and spans
         t8 = time.perf_counter(); stages["metrics"] += t8 - t7
     return stages
