@@ -70,7 +70,12 @@ def _ensure_worker_path(spark: SparkSession) -> None:
 
     PYTHONPATH exports only help before the JVM starts; for an already-live
     session the reliable channel is ``addPyFile`` with a package zip — the
-    runtime equivalent of ``spark-submit --py-files`` (north rule)."""
+    runtime equivalent of ``spark-submit --py-files`` (north rule).
+
+    The zip is written into a new directory under the context's own
+    ``SparkFiles`` root, which Spark deletes when the context stops: no
+    other session sees it half-written, no later session can ship it
+    stale, and none is left behind. A failed ``addPyFile`` raises here."""
     existing = os.environ.get("PYTHONPATH", "")
     if _REPO not in existing.split(os.pathsep):
         os.environ["PYTHONPATH"] = _REPO + (
@@ -78,34 +83,23 @@ def _ensure_worker_path(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_nhao_pyfile_added", False):
         return
-    try:
-        import tempfile
-        import zipfile
-        import hashlib
+    import tempfile
+    import zipfile
+
+    from pyspark import SparkFiles
+    zpath = os.path.join(tempfile.mkdtemp(dir=SparkFiles.getRootDirectory()),
+                         "nhao_engine.zip")
+    with zipfile.ZipFile(zpath, "w") as z:
         pkg_dir = os.path.join(_REPO, "norsk_historisk_avis_ocr_spark")
-        payload: list[tuple[str, bytes]] = []
-        digest = hashlib.sha256()
         for root, _dirs, files in os.walk(pkg_dir):
             if "__pycache__" in root:
                 continue
             for f in sorted(files):
                 if f.endswith(".py"):
                     full = os.path.join(root, f)
-                    data = open(full, "rb").read()
-                    payload.append((os.path.relpath(full, _REPO), data))
-                    digest.update(data)
-        # content-addressed name: a stale cached zip from an earlier code
-        # version must never be shipped
-        zpath = os.path.join(tempfile.gettempdir(),
-                             f"nhao_engine_{digest.hexdigest()[:12]}.zip")
-        if not os.path.exists(zpath):
-            with zipfile.ZipFile(zpath, "w") as z:
-                for rel, data in payload:
-                    z.writestr(rel, data)
-        sc.addPyFile(zpath)
-        sc._nhao_pyfile_added = True
-    except Exception:  # pragma: no cover - best effort
-        pass
+                    z.write(full, os.path.relpath(full, _REPO))
+    sc.addPyFile(zpath)
+    sc._nhao_pyfile_added = True
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -54,7 +54,9 @@ def build_session(app: str = "nhao-extract", master: str | None = None,
         # Python workers pay ~180 ms/task re-reading pyspark.zip's central
         # directory in importlib.invalidate_caches() (CPython 3.11 makes
         # zipimporter invalidation eager). The custom daemon guards the
-        # re-read on the archive's (mtime, size) — see zipcache_daemon.py.
+        # re-read on the archive's (mtime, size), and starts workers warm
+        # (compiled pyspark cached on disk, the worker stack imported
+        # before the fork) — see zipcache_daemon.py.
         # Local mode only: the daemon module must be importable from the
         # worker environment's PYTHONPATH, which local mode inherits from
         # the export above; a cluster deployment sets this conf plus

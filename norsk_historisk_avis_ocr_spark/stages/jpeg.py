@@ -876,15 +876,7 @@ def encode_jpeg_gray(arr: np.ndarray, quality: int = 95,
     h, w = arr.shape
     q = _quant_table(quality)
     by, bx = -(-h // 8), -(-w // 8)
-    padded = np.empty((by * 8, bx * 8), dtype=np.uint8)
-    padded[:h, :w] = arr
-    padded[h:, :w] = arr[h - 1:h, :]          # edge-replicate padding
-    padded[:, w:] = padded[:, w - 1:w]
-    blocks = padded.reshape(by, 8, bx, 8).transpose(0, 2, 1, 3) \
-        .reshape(by * bx, 8, 8).astype(np.float64) - 128.0
-    coefs = _DCT @ blocks @ _DCT.T  # C = T·X·Tᵀ, batched matmul
-    qcoef = np.round(coefs / q).astype(np.int64)
-    zz = qcoef[:, _ZZ_ROWS, _ZZ_COLS]  # (n, 64) zigzag order
+    zz = _quantized_zigzag(_pad_edge(arr, by * 8, bx * 8), by, bx, q)
 
     dc_codes = _canonical_codes(_DC_BITS, _DC_VALS)
     ac_bits, ac_vals = _ac_table_spec()
@@ -946,7 +938,7 @@ def _quantized_zigzag(plane: np.ndarray, by: int, bx: int,
     quantized coefficient rows in block-raster order."""
     blocks = plane.reshape(by, 8, bx, 8).transpose(0, 2, 1, 3) \
         .reshape(by * bx, 8, 8).astype(np.float64) - 128.0
-    coefs = _DCT @ blocks @ _DCT.T
+    coefs = _DCT @ blocks @ _DCT.T  # C = T·X·Tᵀ, batched matmul
     qcoef = np.round(coefs / q).astype(np.int64)
     return qcoef[:, _ZZ_ROWS, _ZZ_COLS]
 

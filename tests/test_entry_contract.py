@@ -5,6 +5,9 @@ import os
 import pickle
 import subprocess
 import sys
+import zipfile
+
+import pytest
 
 import __spark_entry__ as entrymod
 
@@ -17,6 +20,45 @@ def test_entry_returns_rows(spark):
     assert len(rows) > 0
     assert df.columns == ["url", "header", "combined", "transcribed",
                           "normalized", "n_blocks", "n_cols", "has_masthead"]
+
+
+def test_worker_path_zip_is_whole_private_and_failures_raise(spark,
+                                                             monkeypatch):
+    """``_ensure_worker_path`` hands ``addPyFile`` a complete zip of every
+    package module, once per context, from a directory of its own under
+    the context's SparkFiles root (which Spark deletes with the context);
+    a failed ``addPyFile`` raises where it happens."""
+    from pyspark import SparkFiles
+    sc = spark.sparkContext
+    shipped = []
+
+    def add(path):
+        with zipfile.ZipFile(path) as z:
+            assert z.testzip() is None
+            shipped.append((path, sorted(z.namelist())))
+
+    monkeypatch.setattr(sc, "_nhao_pyfile_added", False, raising=False)
+    monkeypatch.setattr(sc, "addPyFile", add)
+    entrymod._ensure_worker_path(spark)
+    entrymod._ensure_worker_path(spark)
+    [(path, names)] = shipped
+    assert sc._nhao_pyfile_added
+    assert os.path.dirname(os.path.dirname(path)) == \
+        SparkFiles.getRootDirectory()
+    pkg = os.path.join(REPO, "norsk_historisk_avis_ocr_spark")
+    assert names == sorted(
+        os.path.relpath(os.path.join(root, f), REPO)
+        for root, _dirs, files in os.walk(pkg) if "__pycache__" not in root
+        for f in files if f.endswith(".py"))
+
+    def fail(path):
+        raise RuntimeError("addPyFile failed")
+
+    monkeypatch.setattr(sc, "_nhao_pyfile_added", False)
+    monkeypatch.setattr(sc, "addPyFile", fail)
+    with pytest.raises(RuntimeError, match="addPyFile failed"):
+        entrymod._ensure_worker_path(spark)
+    assert not sc._nhao_pyfile_added
 
 
 def test_every_oracle_key_has_a_query():

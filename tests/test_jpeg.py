@@ -8,8 +8,8 @@ import numpy as np
 import pytest
 
 from norsk_historisk_avis_ocr_spark.stages.jpeg import (
-    _DCT, _ZZ_COLS, _ZZ_ROWS, ZIGZAG, _quant_table, decode_jpeg_gray,
-    encode_jpeg_gray,
+    _DCT, _ZZ_COLS, _ZZ_ROWS, ZIGZAG, _quant_table, _quantized_zigzag,
+    decode_jpeg_gray, encode_jpeg_gray,
 )
 
 
@@ -46,13 +46,15 @@ def test_decoder_matches_independent_reconstruction():
     quality = 85
     data = encode_jpeg_gray(img, quality=quality)
 
-    # independent expectation: forward path re-derived in the test
+    # The quantized coefficients come from the encoder's own forward path:
+    # a forward DCT re-derived here (einsum) can round a coefficient that
+    # sits on a .5 boundary the other way than the encoder's matmul did,
+    # and then the expectation describes bytes the encoder never wrote.
+    # Dequantization and the inverse DCT stay independent of the decoder.
     q = _quant_table(quality)
     h, w = img.shape
-    blocks = img.reshape(h // 8, 8, w // 8, 8).transpose(0, 2, 1, 3) \
-        .reshape(-1, 8, 8).astype(np.float64) - 128.0
-    coefs = np.einsum("ik,nkl,jl->nij", _DCT, blocks, _DCT)
-    qc = np.round(coefs / q).astype(np.int64)
+    qc = np.empty((h // 8 * (w // 8), 8, 8), dtype=np.int64)
+    qc[:, _ZZ_ROWS, _ZZ_COLS] = _quantized_zigzag(img, h // 8, w // 8, q)
     spatial = np.einsum("ki,nkl,lj->nij", _DCT, (qc * q).astype(np.float64),
                         _DCT)
     want = np.clip(np.round(spatial) + 128, 0, 255).astype(np.uint8) \

@@ -42,6 +42,16 @@ def _norm_rows(cols, rows):
     return sorted(cols), sorted(out, key=repr)
 
 
+def _settle(sc, group: str) -> None:
+    """Cancel what is left of a failed row's jobs and wait until no stage
+    is active: a failed job returns before its other tasks are killed, and
+    their dying Python workers can fail the next row's job."""
+    sc.cancelJobGroup(group)
+    tracker = sc.statusTracker()
+    while tracker.getActiveStageIds():
+        time.sleep(0.1)
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -60,6 +70,8 @@ def main():
         if only and name not in only:
             continue
         t0 = time.time()
+        group = f"validate-{name}"
+        spark.sparkContext.setJobGroup(group, name)
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
@@ -67,6 +79,7 @@ def main():
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             n_bad += 1
+            _settle(spark.sparkContext, group)
             continue
         if name not in oracles:
             print(f"rows  {name}: {len(srows)} rows (no oracle) "
