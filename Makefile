@@ -1,4 +1,4 @@
-.PHONY: test dist bench perfbench validate scaling
+.PHONY: test dist bench perfbench validate scaling plans
 
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
@@ -25,3 +25,6 @@ validate:
 
 scaling:
 	python tools/bench_scaling.py /root/testdata/sf0.1 32
+
+plans:
+	python tools/plans.py

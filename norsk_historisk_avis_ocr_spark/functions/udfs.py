@@ -144,8 +144,7 @@ def projected_schema(output_columns: list[str] | None) -> StructType:
 
 
 def extract_map_fn(normalize_table: tuple[dict, set] | None,
-                   output_columns: list[str] | None = None,
-                   normalize_langs: set[str] | None = None):
+                   output_columns: list[str] | None = None):
     """Build the ``mapInPandas`` function. ``normalize_table`` is the
     broadcast-safe plain-dict form of the trie (rebuilt once per executor —
     the J3 broadcast-lookup pattern).
@@ -155,9 +154,6 @@ def extract_map_fn(normalize_table: tuple[dict, set] | None,
     the full Arrow transfer and compute. Requesting a subset both trims the
     Arrow payload and skips work — e.g. without ``correction_changes`` the
     quadratic word diff never runs.
-
-    ``normalize_langs`` normalizes only the rows whose ``lang`` is in the
-    set; the batch must then carry a ``lang`` column.
     """
     fields = [f.name for f in projected_schema(output_columns).fields]
     wants = frozenset(fields)
@@ -168,24 +164,9 @@ def extract_map_fn(normalize_table: tuple[dict, set] | None,
                                             normalize_table[1])
                       if normalize_table is not None else None)
         for pdf in batches:
-            if normalize_langs is not None:
-                if "lang" not in pdf:
-                    # loud, not silent: per-language gating was requested
-                    # but the batch carries no language (mirrors
-                    # the ValueError extract_pages raises before planning)
-                    raise ValueError(
-                        "normalize_langs given but batch has no 'lang' "
-                        "column")
-                rows = [extract_one(u, h, normalizer
-                                    if lg in normalize_langs else None,
-                                    wants=wants)
-                        for u, h, lg in zip(pdf["url"].tolist(),
-                                            pdf["html"].tolist(),
-                                            pdf["lang"].tolist())]
-            else:
-                rows = [extract_one(u, h, normalizer, wants=wants)
-                        for u, h in zip(pdf["url"].tolist(),
-                                        pdf["html"].tolist())]
+            rows = [extract_one(u, h, normalizer, wants=wants)
+                    for u, h in zip(pdf["url"].tolist(),
+                                    pdf["html"].tolist())]
             # column-wise assembly: pd.DataFrame(list-of-dicts) re-infers
             # per row; a dict of per-field lists is one C pass per column
             # (and yields the projected columns only, in declared order)

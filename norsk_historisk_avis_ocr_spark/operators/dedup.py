@@ -277,8 +277,7 @@ def minhash_signatures(docs: DataFrame, k: int = 3) -> DataFrame:
 
 
 def minhash_lsh_pairs(docs: DataFrame, k: int = 3,
-                      est_threshold: float = 0.5,
-                      reuse_signatures: bool = True) -> DataFrame:
+                      est_threshold: float = 0.5) -> DataFrame:
     """MinHash+LSH near-dup candidates: band the signature (N_BANDS bands of
     N_MINHASH/N_BANDS rows), bucket-join on (band, band-key), then estimate
     Jaccard as the fraction of equal signature components.
@@ -290,14 +289,12 @@ def minhash_lsh_pairs(docs: DataFrame, k: int = 3,
     union-of-bands plan recomputes it N_BANDS times) and no second join
     back to signatures.
     """
-    sig = minhash_signatures(docs, k)
-    if reuse_signatures:
-        # the self-join otherwise computes the signature subtree (explode +
-        # 16-way min aggregation) once per side; lazily checkpointing the
-        # signatures materializes them once. On a cluster prefer writing
-        # signatures to a table instead (localCheckpoint storage dies with
-        # its executor), which is what a 10^12-row run would do anyway.
-        sig = sig.localCheckpoint(eager=False)
+    # the self-join otherwise computes the signature subtree (explode +
+    # 16-way min aggregation) once per side; lazily checkpointing the
+    # signatures materializes them once. On a cluster prefer writing
+    # signatures to a table instead (localCheckpoint storage dies with
+    # its executor), which is what a 10^12-row run would do anyway.
+    sig = minhash_signatures(docs, k).localCheckpoint(eager=False)
     rows_per_band = N_MINHASH // N_BANDS
     band_keys = [
         F.md5(F.concat_ws("_", *[F.col(f"mh{b * rows_per_band + r}")

@@ -77,28 +77,15 @@ def explode_sections(results: DataFrame) -> DataFrame:
 
 
 def extract_pages(pages: DataFrame, normalize: bool = True,
-                  output_columns: list[str] | None = None,
-                  normalize_langs: set[str] | None = None) -> DataFrame:
+                  output_columns: list[str] | None = None) -> DataFrame:
     """Run the full extraction over a pages DataFrame → RESULT_SCHEMA rows.
 
     ``output_columns``: project inside the UDF (Catalyst cannot prune
     through mapInPandas — a downstream select still pays full transfer and
     compute). ``url`` is always included.
-
-    ``normalize_langs``: apply the orthography pass only to these language
-    codes (the table is historical-Norwegian); other rows keep the
-    reflowed text as ``final``. None = normalize everything.
     """
     from ..functions.udfs import projected_schema
-    if normalize_langs is not None:
-        if "lang" not in pages.columns:
-            raise ValueError(
-                "normalize_langs given but input has no 'lang' column; "
-                "refusing to silently normalize every row")
-        df = pages.select("url", "html", "lang")
-    else:
-        df = pages.select("url", "html")
     table = default_normalizer().to_table() if normalize else None
-    return df.mapInPandas(
-        extract_map_fn(table, output_columns, normalize_langs),
+    return pages.select("url", "html").mapInPandas(
+        extract_map_fn(table, output_columns),
         schema=projected_schema(output_columns))

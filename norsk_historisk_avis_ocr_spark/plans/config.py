@@ -18,7 +18,6 @@ from dataclasses import dataclass, field
 class EngineConfig:
     """One extraction configuration (≅ one reference engine + kwargs)."""
     normalize: bool = True
-    normalize_langs: frozenset[str] | None = None
     diff_changes: bool = True
 
     @property
@@ -27,15 +26,11 @@ class EngineConfig:
         ``output_dir_name`` (results of different configs never mix)."""
         if not self.normalize:
             return "extract-plain"
-        langs = ("-" + "+".join(sorted(self.normalize_langs))
-                 if self.normalize_langs else "")
         diff = "" if self.diff_changes else "-nodiff"
-        return f"extract-norm{langs}{diff}"
+        return f"extract-norm{diff}"
 
     def extract_kwargs(self) -> dict:
         kw: dict = {"normalize": self.normalize}
-        if self.normalize_langs is not None:
-            kw["normalize_langs"] = set(self.normalize_langs)
         if not self.diff_changes:
             kw["output_columns"] = [
                 f.name for f in __import__(

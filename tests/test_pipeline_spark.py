@@ -209,29 +209,6 @@ def test_resume_partial_then_full(spark, sf_dir, tmp_path):
     pages.unpersist()
 
 
-def test_normalize_langs_gating(spark):
-    html_no = ("<html><body><table><tr><td>clet rnann liar</td></tr>"
-               "</table></body></html>").encode()
-    df = spark.createDataFrame(
-        [("u-no", bytearray(html_no), "no"),
-         ("u-sv", bytearray(html_no), "sv")],
-        "url string, html binary, lang string")
-    rows = {r.url: r for r in
-            extract_pages(df, normalize_langs={"no", "da"}).collect()}
-    assert rows["u-no"].normalized.startswith("det mann har")
-    assert rows["u-no"].final == rows["u-no"].normalized
-    assert rows["u-sv"].normalized is None
-    assert rows["u-sv"].final == rows["u-sv"].transcribed
-
-
-def test_normalize_langs_requires_lang_column(spark):
-    import pytest as _pytest
-    df = spark.createDataFrame(
-        [("u", bytearray(b"<html></html>"))], "url string, html binary")
-    with _pytest.raises(ValueError, match="no 'lang' column"):
-        extract_pages(df, normalize_langs={"no"})
-
-
 def test_read_done_urls_edge_cases(spark, tmp_path):
     """The done set is read only from a path holding a committed file: a
     missing path or an empty directory holds none."""

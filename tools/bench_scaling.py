@@ -1,9 +1,9 @@
 """Scaling-efficiency evidence (north rule, sandbox substitute).
 
-Materializes the synthetic pages table once, then runs the identical
-extraction job at several parallelism levels in fresh subprocesses (one JVM
-each), and reports N→4N throughput scaling efficiency for both the
-(2→8) and (8→32) pairs.
+Materializes the synthetic pages table once, then times bench.py's
+``extract_pipeline`` leg over it at several parallelism levels through
+``tools/ab.py`` (a fresh JVM per run), and reports N→4N throughput scaling
+efficiency for both the (2→8) and (8→32) pairs.
 
 Usage: python tools/bench_scaling.py [sf_dir] [replicate]
 Prints a JSON summary; paste/refresh the table in BENCH/BASELINE.md.
@@ -23,9 +23,11 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
+import shutil
 import sys
 import tempfile
+
+from ab import runs
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -37,37 +39,39 @@ def main():
 
     tmp = tempfile.mkdtemp(prefix="nhao_scaling_")
     pages_path = os.path.join(tmp, "pages")
+    try:
+        from norsk_historisk_avis_ocr_spark.plans import build_session
+        from norsk_historisk_avis_ocr_spark.sources import pages_df
+        spark = build_session("materialize", master="local[32]",
+                              shuffle_partitions=32)
+        spark.sparkContext.setLogLevel("ERROR")
+        pages_df(spark, sf_dir, replicate=replicate,
+                 partitions=256).write.parquet(pages_path)
+        spark.stop()
 
-    from norsk_historisk_avis_ocr_spark.plans import build_session
-    from norsk_historisk_avis_ocr_spark.sources import pages_df
-    spark = build_session("materialize", master="local[32]",
-                          shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
-    pages_df(spark, sf_dir, replicate=replicate,
-             partitions=256).write.parquet(pages_path)
-    spark.stop()
-
-    rates = {}
-    # two interleaved attempts per level; keep the best (the host has noisy
-    # co-tenants — load swings of 5-10 are routine)
-    for cores in [2, 8, 32, 2, 8, 32]:
-        out = subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools", "extract_worker.py"),
-             str(cores), pages_path],
-            capture_output=True, text=True, timeout=1200)
-        line = out.stdout.strip().splitlines()[-1]
-        rec = json.loads(line)
-        print(json.dumps(rec), file=sys.stderr)
-        if cores not in rates or rec["docs_per_sec"] > rates[cores]["docs_per_sec"]:
-            rates[cores] = rec
+        # every level's bench.py reads this one table
+        os.environ.update(NHAO_BENCH_PAGES=pages_path,
+                          SPARK_GRAFT_SF_DIR=sf_dir)
+        rates = {}
+        # two interleaved attempts per level; keep the best (the host has
+        # noisy co-tenants — load swings of 5-10 are routine)
+        for rec in runs(["extract_pipeline"], [REPO], cores=[2, 8, 32],
+                        rounds=2):
+            print(json.dumps(rec), file=sys.stderr)
+            best = rates.get(rec["cpus"])
+            if best is None or (rec["extract_docs_per_sec"]
+                                > best["extract_docs_per_sec"]):
+                rates[rec["cpus"]] = rec
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
     def eff(lo, hi):
-        return round((rates[hi]["docs_per_sec"] / rates[lo]["docs_per_sec"])
-                     / (hi / lo), 3)
+        return round((rates[hi]["extract_docs_per_sec"]
+                      / rates[lo]["extract_docs_per_sec"]) / (hi / lo), 3)
 
     print(json.dumps({
         "docs": rates[2]["docs"],
-        "docs_per_sec": {c: rates[c]["docs_per_sec"] for c in rates},
+        "docs_per_sec": {c: rates[c]["extract_docs_per_sec"] for c in rates},
         "efficiency_2_to_8": eff(2, 8),
         "efficiency_8_to_32": eff(8, 32),
     }))

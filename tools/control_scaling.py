@@ -2,20 +2,23 @@
 multiprocessing. Separates hardware saturation from engine overhead —
 compare its N→4N efficiency with tools/bench_scaling.py's.
 
+Each process extracts the same 500 bench-shaped pages
+(``profile_extract.load_pages``), with this checkout's package.
+
 Usage: python tools/control_scaling.py
 """
 
 from __future__ import annotations
 
 import multiprocessing as mp
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-import pyarrow.parquet as pq  # noqa: E402
-
-from norsk_historisk_avis_ocr_spark.sources.pages import build_page  # noqa: E402
+from profile_extract import load_pages  # noqa: E402
 
 PAGES = None
 EXTRACT = None
@@ -28,9 +31,7 @@ def _init():
     from norsk_historisk_avis_ocr_spark.stages.normalize import (
         default_normalizer,
     )
-    docs = pq.read_table(
-        "/root/testdata/sf0.01/documents.parquet").to_pylist()
-    PAGES = [build_page(d["doc_id"], d["text"], d["lang"]) for d in docs]
+    PAGES = load_pages(500)
     EXTRACT = extract_one
     NORM = default_normalizer()
 

@@ -1,23 +1,28 @@
-"""Dump formatted physical plans for the key queries → BENCH/PLANS.md.
+"""Dump formatted physical plans → BENCH/PLANS.md: the key contract
+queries, the single-call plans of operators whose contract row merges two
+arms, and every bench.py leg over the materialized inputs bench.py times.
 
 The plan-quality *assertions* live in tests/test_plans.py; this artifact
 makes the full plans reviewable without running Spark.
 
-Usage: python tools/explain_audit.py [sf_dir]
+Usage: python tools/plans.py [sf_dir]
 """
 
 from __future__ import annotations
 
 import io
 import os
+import shutil
 import sys
+import tempfile
 from contextlib import redirect_stdout
+from functools import partial
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
-from norsk_historisk_avis_ocr_spark.plans import build_session  # noqa: E402
+import bench  # noqa: E402
 
 
 def _single_arm():
@@ -34,29 +39,30 @@ def _single_arm():
     from norsk_historisk_avis_ocr_spark.operators import similarity as sim
     from norsk_historisk_avis_ocr_spark.operators import skew as sk
 
-    def t(spark, sf, name):
+    def table(spark, sf, name):
         return spark.read.parquet(os.path.join(sf, f"{name}.parquet"))
 
     return {
         "dedup_ngram_capped (operator arm)":
             lambda s, sf: dd.ngram_jaccard_pairs(
-                t(s, sf, "documents"), k=3, threshold=0.12,
+                table(s, sf, "documents"), k=3, threshold=0.12,
                 max_shingle_df=3),
         "emb_lsh_topk (operator arm)":
             lambda s, sf: sim.lsh_bucket_topk(
-                t(s, sf, "embeddings"), 0, k=5, dim=64),
+                table(s, sf, "embeddings"), 0, k=5, dim=64),
         "salted_hot_key_sum (operator arm)":
             lambda s, sf: sk.salted_sum(
-                t(s, sf, "events"), "user_id",
+                table(s, sf, "events"), "user_id",
                 F.round(F.col("value") * 1000).cast("long"),
                 "value_milli", n_salts=16),
         "simhash_dup_pairs (operator arm)":
             lambda s, sf: dd.simhash_dup_pairs(
-                t(s, sf, "documents"), max_hamming=3),
+                table(s, sf, "documents"), max_hamming=3),
         "pattern_hygiene (operator arm)":
             lambda s, sf: q.pattern_hygiene(
-                t(s, sf, "documents")),
+                table(s, sf, "documents")),
     }
+
 
 AUDIT = [
     "extract_pipeline", "raster_layout", "multimodal_features",
@@ -74,12 +80,12 @@ AUDIT = [
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = build_session("explain", master="local[4]", shuffle_partitions=4)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.session("plans", 4)
+    tmp = tempfile.mkdtemp(prefix="nhao_plans_")
     qs = entrymod.queries()
     out = ["# Physical plans (explain formatted) — key contract queries",
            "",
-           "Generated by `python tools/explain_audit.py`; plan-quality",
+           "Generated by `python tools/plans.py` (`make plans`); plan-quality",
            "assertions live in `tests/test_plans.py`.",
            "",
            "Round-4 note: contract rows that MERGE two operator arms",
@@ -88,22 +94,33 @@ def main():
            "so their Exchange counts are ~2× the production shape. The",
            "'(operator arm)' sections below show the single-call plans a",
            "production job actually executes — those are what the plan",
-           "gates assert.", ""]
-    audited = [(name, qs[name]) for name in AUDIT]
-    audited += sorted(_single_arm().items())
-    for name, fn in audited:
-        df = fn(spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        exchanges = plan.count("Exchange")
-        out += [f"## {name}", "",
-                f"Exchanges: {exchanges}", "", "```", plan.rstrip(), "```", ""]
+           "gates assert.",
+           "",
+           "The '(bench leg)' sections are `bench.py`'s legs at local[4],",
+           "over the inputs it materializes (under `<tmp>`) and times.", ""]
+    sections = [(name, partial(qs[name], spark, sf_dir)) for name in AUDIT]
+    sections += [(name, partial(fn, spark, sf_dir))
+                 for name, fn in sorted(_single_arm().items())]
+    t = bench.inputs(spark, sf_dir, 4, tmp)
+    sections += [(f"{name} (bench leg)", partial(build, t))
+                 for name, (_, build) in bench.LEGS.items()]
+    try:
+        for name, build in sections:
+            df = build()
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                df.explain("formatted")
+            plan = buf.getvalue().replace(tmp, "<tmp>")
+            exchanges = plan.count("Exchange")
+            out += [f"## {name}", "",
+                    f"Exchanges: {exchanges}", "", "```", plan.rstrip(),
+                    "```", ""]
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+        spark.stop()
     with open(os.path.join(REPO, "BENCH", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote BENCH/PLANS.md")
-    spark.stop()
 
 
 if __name__ == "__main__":
