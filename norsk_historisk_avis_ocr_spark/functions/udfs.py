@@ -10,8 +10,6 @@ work. No per-row Python ever runs on the driver.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql.types import (
     ArrayType, BooleanType, IntegerType, LongType, StringType, StructField,
     StructType,
@@ -51,9 +49,6 @@ RESULT_SCHEMA = StructType([
     StructField("spans", SPAN_TYPE, False),
     StructField("metrics", METRICS_TYPE, False),
 ])
-
-_SHORT_LINE = re.compile(r"^\s*\S{1,2}\s*$")
-_HYPHEN_BREAK = re.compile(r"-\n\s*")
 
 
 def extract_one(url: str, html: bytes, normalizer: OrthographyNormalizer | None,
@@ -103,9 +98,10 @@ def extract_one(url: str, html: bytes, normalizer: OrthographyNormalizer | None,
     if all_fields or "metrics" in wants:
         raws = ([header_raw] if header_raw is not None else []) + column_raws
         # C-speed forms of the regex counters (equivalence pinned by
-        # tests): _SHORT_LINE matches iff the stripped line is 1-2 chars
-        # (a <=2-char strip residue cannot contain whitespace), and every
-        # non-overlapping _HYPHEN_BREAK match starts at a distinct "-\n".
+        # tests/test_textops.py): ^\s*\S{1,2}\s*$ matches iff the
+        # stripped line is 1-2 chars (a <=2-char strip residue cannot
+        # contain whitespace), and every non-overlapping
+        # textops._HYPHEN_BREAK match starts at a distinct "-\n".
         n_dropped = sum(1 for raw in raws for ln in raw.split("\n")
                         if 0 < len(ln.strip()) <= 2)
         n_hyphens = sum(s.count("-\n") for s in sections)

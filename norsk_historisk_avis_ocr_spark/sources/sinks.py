@@ -3,11 +3,11 @@
 The reference marks a document done when ``combined.txt`` exists in its
 output dir (``ocr.py:45-47``) and skips it on the next run
 (``ocr.py:151-181``). Here the done-marker is the committed results table
-itself: a successful write lands an atomic parquet directory (Iceberg
-snapshot in production — the sandbox has no Iceberg runtime jar, so the
-parquet + ``_SUCCESS``-manifest fallback described in SURVEY.md §4.2 is
-used), and the next run anti-joins ``pages`` against the committed urls
-(``operators/resume.py``).
+itself: a successful write lands an atomic parquet directory (the
+parquet + ``_SUCCESS``-manifest form described in SURVEY.md §4.2), and
+the next run anti-joins ``pages`` against the committed urls
+(``operators/resume.py``). The sink is a path, not a catalog table:
+:func:`has_committed` and :func:`read_done_urls` read ``<path>/*.parquet``.
 """
 
 from __future__ import annotations
@@ -16,20 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
 
-def _iceberg_available(spark: SparkSession) -> bool:
-    return "org.apache.iceberg.spark.SparkCatalog" in \
-        spark.conf.get("spark.sql.catalog.spark_catalog", "")
-
-
 def write_results(df: DataFrame, path: str) -> None:
     """Commit a results batch. Parquet append is atomic per job on a local
-    filesystem (``_SUCCESS`` marker); with an Iceberg catalog configured the
-    same call path would use ``writeTo(...).append()`` for snapshot
-    isolation."""
-    spark = df.sparkSession
-    if _iceberg_available(spark):  # pragma: no cover - not present in sandbox
-        df.writeTo(path).append()
-        return
+    filesystem (``_SUCCESS`` marker)."""
     df.write.mode("append").option("compression", "zstd").parquet(path)
 
 

@@ -1,4 +1,4 @@
-"""Pure-stdlib+numpy JPEG codec (baseline + progressive dispatch).
+"""Pure-stdlib+numpy JPEG codec (baseline and progressive decode).
 
 The reference's input class is scanned newspaper pages; its engines decode
 them with PIL and re-encode to JPEG for the vision API
@@ -7,13 +7,13 @@ them with PIL and re-encode to JPEG for the vision API
 libraries, so — like ``stages/png.py`` — the raster path ships its own
 minimal codec:
 
-- :func:`decode_jpeg_gray` — baseline sequential DCT (SOF0) → (H, W)
-  uint8 grayscale. Single-component streams decode the plane directly;
-  3-component YCbCr streams (the common color-scan shape) decode chroma
-  too — per-component quant tables, integer-ratio pixel-replication
-  upsample (4:2:0 / 4:2:2 / 4:4:4) — and convert through RGB with the
-  PIL-exact integer luma. Restart markers and 16-bit quant tables are
-  handled.
+- :func:`decode_jpeg_gray` — baseline sequential (SOF0/1) or progressive
+  (SOF2) DCT → (H, W) uint8 grayscale. Single-component streams decode
+  the plane directly; 3-component YCbCr streams (the common color-scan
+  shape) decode chroma too — per-component quant tables, integer-ratio
+  pixel-replication upsample (4:2:0 / 4:2:2 / 4:4:4) — and convert
+  through RGB with the PIL-exact integer luma. Restart markers and
+  16-bit quant tables are handled.
 - :func:`decode_jpeg_rgb` — the same color path returning (H, W, 3) RGB.
 - :func:`encode_jpeg_gray` / :func:`encode_jpeg_color` — baseline
   encoders (test/bench input generators): level shift → 8×8 orthonormal
@@ -23,21 +23,26 @@ minimal codec:
   interleaved YCbCr MCUs with selectable luma sampling (4:2:0 default)
   and the Annex K.2 chroma quant table.
 
-Progressive (SOF2) streams — grayscale AND 3-component YCbCr color —
-dispatch to ``stages/jpeg_progressive.py`` (interleaved DC scans,
-per-component AC spectral-selection scans, successive approximation,
-EOB-run coding). Everything else non-baseline (arithmetic coding,
-12-bit, hierarchical) raises ``ValueError`` so callers can quarantine
-rather than mis-decode — the same loud-failure contract as the PNG
-codec.
+Both codings share one frame reader (:func:`_decode_planes`: the marker
+walk and the DQT/DHT/SOF/DRI/SOS parsers, each checking its segment's
+length before indexing it) and one plane assembler
+(:func:`_assemble_plane`). Only the scan decoders differ: the baseline
+one below, and the progressive one in ``stages/jpeg_progressive.py``
+(interleaved DC scans, per-component AC spectral-selection scans,
+successive approximation, EOB-run coding). Everything else (arithmetic
+coding, 12-bit, lossless, hierarchical) raises ``ValueError`` so callers
+can quarantine rather than mis-decode — the same loud-failure contract as
+the PNG codec, and the only exception a malformed stream raises.
 
 Performance shape: dequant + IDCT run as one batched matmul over every
-block. Huffman decode has two paths: streams with many restart segments
-(standard scanner output) take a numpy LOCKSTEP decoder — every segment
-is an independent lane and all lanes advance one symbol per vectorized
-step (4-8× the scalar loop, bit-exact, see ``_decode_mcus_vector``);
-other streams take a Python loop over a 2^16 peek-table (O(1) per
-symbol, 32-bit word-peek cursor).
+block. Baseline Huffman decode has three paths. Streams with at least
+``_VECTOR_MIN_LANES`` restart segments (standard scanner output) take a
+numpy LOCKSTEP decoder — every segment is an independent lane and all
+lanes advance one symbol per vectorized step (4-8× the scalar loop,
+bit-exact, see ``_decode_mcus_vector``). Other streams decode segment by
+segment over a 2^16 peek-table (O(1) per symbol): segments of at least
+``_WORDS_MIN_BYTES`` take the 32-bit word-peek loop, smaller ones (short
+restart intervals) the scalar bit-cursor loop, which is faster there.
 """
 
 from __future__ import annotations
@@ -164,6 +169,7 @@ class _PeekTable:
 
 
 _ZZ_FLAT = [r * 8 + c for r, c in ZIGZAG]  # zigzag pos → flat block index
+_ZZ_NATURAL = np.argsort(_ZZ_FLAT)  # flat block index → zigzag pos
 
 
 def _idct_blocks(coefs: np.ndarray) -> np.ndarray:
@@ -227,16 +233,16 @@ def _ycc_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
 
 
 def decode_jpeg_gray(data: bytes) -> np.ndarray:
-    """Baseline JPEG bytes → (H, W) uint8 grayscale. Single-component
-    streams decode the plane directly; 3-component YCbCr streams decode
-    chroma too and convert through RGB with the PIL-exact integer luma
-    (``stages/png.py:to_grayscale``) — the reference's
-    ``Image.convert("L")`` pipeline (``engines/_columns.py:442``)."""
-    out = _decode_jpeg(data, rgb=False)
-    if isinstance(out, list):  # 3-component: full chroma round-trip
+    """JPEG bytes (baseline or progressive) → (H, W) uint8 grayscale.
+    3-component YCbCr streams convert through RGB with the PIL-exact
+    integer luma (``stages/png.py:to_grayscale``) — the reference's
+    ``Image.convert("L")`` pipeline (``engines/_columns.py:442``); any
+    other stream returns its first component's plane."""
+    planes = _decode_planes(data)
+    if len(planes) == 3:
         from .png import to_grayscale
-        return to_grayscale(_ycc_to_rgb(*out))
-    return out
+        return to_grayscale(_ycc_to_rgb(*planes))
+    return planes[0]
 
 
 def decode_jpeg_rgb(data: bytes) -> np.ndarray:
@@ -244,18 +250,27 @@ def decode_jpeg_rgb(data: bytes) -> np.ndarray:
     (H, W, 3) uint8 RGB. Chroma planes are pixel-replication upsampled
     to full resolution (integer sampling ratios only). Raises ValueError
     for streams that are not 3-component color."""
-    out = _decode_jpeg(data, rgb=True)
-    if isinstance(out, np.ndarray) and out.ndim == 3:
-        return out  # progressive path returns finished RGB
-    if not isinstance(out, list) or len(out) != 3:
+    planes = _decode_planes(data)
+    if len(planes) != 3:
         raise ValueError("not a 3-component color JPEG")
-    return _ycc_to_rgb(*out)
+    return _ycc_to_rgb(*planes)
 
 
-def _decode_jpeg(data: bytes, rgb: bool):
-    """Marker walk shared by the gray/rgb entry points. Returns the
-    single luma plane for 1-component streams, or the [Y, Cb, Cr] plane
-    list for 3-component streams; ``rgb=True`` requires 3 components."""
+# SOF markers of the codings this decoder does not implement (lossless,
+# hierarchical, arithmetic); 0xC4/0xC8/0xCC are DHT/JPG/DAC, not frames
+_UNSUPPORTED_SOF = (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE,
+                    0xCF)
+
+
+def _decode_planes(data: bytes) -> list[np.ndarray]:
+    """The frame reader shared by both entry points: one marker walk
+    over SOI, DQT, DHT, SOF0/1/2, DRI and SOS. A baseline frame's single
+    scan goes to :func:`_decode_scan`; each scan of a progressive frame
+    goes to ``jpeg_progressive._decode_scan_progressive``, which
+    accumulates into one coefficient store. Either way the coefficient
+    blocks (natural order, MCU order) then go through
+    :func:`_assemble_plane`. Returns [Y, Cb, Cr] for 3-component
+    streams, else the first component's plane alone."""
     if not data.startswith(b"\xff\xd8"):
         raise ValueError("not a JPEG (bad SOI)")
     pos = 2
@@ -263,6 +278,8 @@ def _decode_jpeg(data: bytes, rgb: bool):
     htables: dict[tuple[int, int], _PeekTable] = {}  # (class, id)
     frame = None
     restart_interval = 0
+    blocks = None  # per-plane coefficient blocks
+    scanned = False
     n = len(data)
     while pos + 4 <= n:
         if data[pos] != 0xFF:
@@ -270,110 +287,149 @@ def _decode_jpeg(data: bytes, rgb: bool):
         marker = data[pos + 1]
         if marker == 0xD9:  # EOI
             break
-        (seglen,) = struct.unpack(">H", data[pos + 2:pos + 4])
-        body = data[pos + 4:pos + 2 + seglen]
-        if len(body) != seglen - 2:
+        seg_end = pos + 2 + ((data[pos + 2] << 8) | data[pos + 3])
+        if not pos + 4 <= seg_end <= n:
             raise ValueError("truncated JPEG segment")
-        if marker == 0xDB:  # DQT
-            j = 0
-            while j < len(body):
-                pq, tq = body[j] >> 4, body[j] & 15
-                j += 1
-                if pq == 0:
-                    vals = np.frombuffer(body[j:j + 64], dtype=np.uint8)
-                    j += 64
-                else:
-                    vals = np.frombuffer(body[j:j + 128],
-                                         dtype=">u2").astype(np.int64)
-                    j += 128
-                t = np.zeros((8, 8), dtype=np.int64)
-                t[_ZZ_ROWS, _ZZ_COLS] = vals
-                qtables[tq] = t
-        elif marker == 0xC4:  # DHT
-            j = 0
-            while j < len(body):
-                tc, th = body[j] >> 4, body[j] & 15
-                bits = list(body[j + 1:j + 17])
-                nv = sum(bits)
-                vals = list(body[j + 17:j + 17 + nv])
-                htables[(tc, th)] = _PeekTable(bits, vals)
-                j += 17 + nv
-        elif marker == 0xC0 or marker == 0xC1:  # SOF0/1 baseline
-            precision = body[0]
-            if precision != 8:
-                raise ValueError(f"unsupported JPEG precision {precision}")
-            h, w = struct.unpack(">HH", body[1:5])
-            ncomp = body[5]
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq = body[6 + 3 * c:9 + 3 * c]
-                ch, cv = hv >> 4, hv & 15
-                if not (1 <= ch <= 4 and 1 <= cv <= 4):
-                    # spec range; 0 would divide-by-zero the MCU grid
-                    raise ValueError(f"bad sampling factors {ch}x{cv}")
-                comps.append({"id": cid, "h": ch, "v": cv, "tq": tq})
-            if w == 0 or h == 0 or ncomp == 0:
-                raise ValueError("empty JPEG frame")
-            frame = {"w": w, "h": h, "comps": comps}
-        elif marker == 0xC2:  # SOF2 progressive → dedicated decoder
-            from .jpeg_progressive import (
-                decode_progressive_gray, decode_progressive_rgb,
-            )
-            return (decode_progressive_rgb if rgb
-                    else decode_progressive_gray)(data)
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
+        body = data[pos + 4:seg_end]
+        if marker == 0xDB:
+            _read_dqt(body, qtables)
+        elif marker == 0xC4:
+            _read_dht(body, htables)
+        elif marker in (0xC0, 0xC1, 0xC2):
+            progressive = marker == 0xC2
+            if frame is not None and frame["progressive"] != progressive:
+                raise ValueError("baseline and progressive SOF in one "
+                                 "stream")
+            frame = _read_sof(body, progressive)
+            if progressive:
+                # zigzag-order store every scan refines in place
+                blocks = [np.zeros((frame["mcuy"] * c["v"] * frame["mcux"]
+                                    * c["h"], 64), dtype=np.int32)
+                          for c in frame["comps"]]
+        elif marker in _UNSUPPORTED_SOF:
             raise ValueError(
                 f"unsupported JPEG coding (SOF{marker - 0xC0}); "
-                "baseline sequential only")
+                "baseline sequential and progressive only")
         elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", body[:2])
+            if len(body) < 2:
+                raise ValueError("truncated DRI segment")
+            restart_interval = (body[0] << 8) | body[1]
         elif marker == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("SOS before SOF")
-            ncomp = len(frame["comps"])
-            if rgb and ncomp != 3:
-                raise ValueError(
-                    f"not a 3-component color JPEG ({ncomp} components)")
-            return _decode_scan(data, pos + 2 + seglen, body, frame,
-                                qtables, htables, restart_interval,
-                                color=(ncomp == 3))
-        pos += 2 + seglen
-    raise ValueError("no SOS marker (no image data)")
+            scan = _read_sos(body)
+            segments, pos = _destuff(data, seg_end)
+            scanned = True
+            if not frame["progressive"]:
+                blocks = _decode_scan(segments, scan, frame, htables,
+                                      restart_interval)
+                break
+            from .jpeg_progressive import _decode_scan_progressive
+            _decode_scan_progressive(segments, scan, frame, htables,
+                                     restart_interval, blocks)
+            continue
+        pos = seg_end
+    if not scanned:
+        # headers alone would "decode" to a uniform gray plane
+        raise ValueError("no SOS marker (no image data)")
+    if frame["progressive"]:
+        blocks = [c[:, _ZZ_NATURAL] for c in blocks]
+    return [_assemble_plane(frame, frame["comps"][ci], blocks[ci], qtables)
+            for ci in range(frame["planes"])]
 
 
-def _decode_scan(data, scan_start, sos, frame, qtables, htables,
-                 restart_interval, color: bool = False):
-    ns = sos[0]
+def _read_dqt(body: bytes, qtables: dict) -> None:
+    j = 0
+    while j < len(body):
+        pq, tq = body[j] >> 4, body[j] & 15
+        size = 64 if pq == 0 else 128
+        if j + 1 + size > len(body):
+            raise ValueError("truncated DQT segment")
+        vals = np.frombuffer(body[j + 1:j + 1 + size],
+                             dtype=np.uint8 if pq == 0 else ">u2")
+        j += 1 + size
+        t = np.zeros((8, 8), dtype=np.int64)
+        t[_ZZ_ROWS, _ZZ_COLS] = vals
+        qtables[tq] = t
+
+
+def _read_dht(body: bytes, htables: dict) -> None:
+    j = 0
+    while j < len(body):
+        if j + 17 > len(body):
+            raise ValueError("truncated DHT segment")
+        tc, th = body[j] >> 4, body[j] & 15
+        bits = list(body[j + 1:j + 17])
+        nv = sum(bits)
+        if j + 17 + nv > len(body):
+            raise ValueError("truncated DHT segment")
+        htables[(tc, th)] = _PeekTable(bits, list(body[j + 17:j + 17 + nv]))
+        j += 17 + nv
+
+
+def _read_sof(body: bytes, progressive: bool) -> dict:
+    """SOF0/1/2 body → frame dict. Baseline frames take any component
+    count (a non-3-component stream yields its first plane); progressive
+    frames only 1 or 3."""
+    if len(body) < 6:
+        raise ValueError("truncated SOF segment")
+    if body[0] != 8:
+        raise ValueError(f"unsupported JPEG precision {body[0]}")
+    h, w, ncomp = (body[1] << 8) | body[2], (body[3] << 8) | body[4], body[5]
+    if len(body) < 6 + 3 * ncomp:
+        raise ValueError("truncated SOF segment")
+    if progressive and ncomp not in (1, 3):
+        raise ValueError(f"unsupported progressive component count {ncomp}")
+    if w == 0 or h == 0 or ncomp == 0:
+        raise ValueError("empty JPEG frame")
+    comps = []
+    for c in range(ncomp):
+        cid, hv, tq = body[6 + 3 * c:9 + 3 * c]
+        ch, cv = hv >> 4, hv & 15
+        if not (1 <= ch <= 4 and 1 <= cv <= 4):
+            # spec range; 0 would divide-by-zero the MCU grid
+            raise ValueError(f"bad sampling factors {ch}x{cv}")
+        comps.append({"id": cid, "h": ch, "v": cv, "tq": tq})
+    hmax = max(c["h"] for c in comps)
+    vmax = max(c["v"] for c in comps)
+    if comps[0]["h"] != hmax or comps[0]["v"] != vmax:
+        # the plane assembly assumes the first (luma) component is
+        # sampled at the max rate; a stream where chroma out-samples luma
+        # would otherwise yield a silently wrong-sized image
+        raise ValueError("first component is not max-sampled")
+    return {"w": w, "h": h, "comps": comps, "hmax": hmax, "vmax": vmax,
+            "mcux": -(-w // (8 * hmax)), "mcuy": -(-h // (8 * vmax)),
+            "progressive": progressive, "planes": 3 if ncomp == 3 else 1}
+
+
+def _read_sos(body: bytes):
+    """SOS body → ([(component id, DC table, AC table)], Ss, Se, Ah, Al)."""
+    if not body or len(body) < 4 + 2 * body[0]:
+        raise ValueError("truncated SOS segment")
+    ns = body[0]
+    sel = [(body[1 + 2 * i], body[2 + 2 * i] >> 4, body[2 + 2 * i] & 15)
+           for i in range(ns)]
+    ss, se, a = body[1 + 2 * ns:4 + 2 * ns]
+    return sel, ss, se, a >> 4, a & 15
+
+
+def _decode_scan(segments, scan, frame, htables, restart_interval):
+    """Baseline (single interleaved) scan → per-plane lists of natural-
+    order coefficient blocks in MCU order. Components past
+    ``frame["planes"]`` are entropy-decoded for stream sync and
+    discarded."""
     comps = frame["comps"]
-    if ns != len(comps):
+    if len(scan[0]) != len(comps):
         raise ValueError("non-interleaved multi-scan JPEG not supported")
-    sel = {}
-    for i in range(ns):
-        cs, tables = sos[1 + 2 * i], sos[2 + 2 * i]
-        sel[cs] = (tables >> 4, tables & 15)
+    sel = {cs: (td, ta) for cs, td, ta in scan[0]}
     for comp in comps:
         if comp["id"] not in sel:  # corrupt header: must quarantine as
             raise ValueError(      # ValueError, not escape as KeyError
                 f"SOS selector missing frame component {comp['id']}")
-    w, h = frame["w"], frame["h"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    if comps[0]["h"] != hmax or comps[0]["v"] != vmax:
-        # the plane-assembly below assumes the first (luma) component is
-        # sampled at the max rate; a stream where chroma out-samples luma
-        # would otherwise yield a silently wrong-sized image
-        raise ValueError("first component is not max-sampled")
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    n_mcu = mcux * mcuy
-
-    segments, _end = _destuff(data, scan_start)
+    n_mcu = frame["mcux"] * frame["mcuy"]
     # per-component decode plan: (dc entry list, ac entry list, blocks/MCU,
     # output list or None) — resolved once so the inner loop is pure
-    # local-variable work. Grayscale mode keeps only the luma blocks
-    # (chroma is entropy-decoded for stream sync and discarded); color
-    # mode keeps every component.
+    # local-variable work
     plan = []
     outs: list[list | None] = []
     tables = []
@@ -382,7 +438,7 @@ def _decode_scan(data, scan_start, sos, frame, qtables, htables,
         ac_t = htables.get((1, sel[comp["id"]][1]))
         if dc_t is None or ac_t is None:
             raise ValueError("missing Huffman table")
-        out: list | None = [] if (color or ci == 0) else None
+        out: list | None = [] if ci < frame["planes"] else None
         outs.append(out)
         tables.append((dc_t, ac_t))
         plan.append((dc_t.entry, ac_t.entry, comp["v"] * comp["h"], out))
@@ -409,47 +465,42 @@ def _decode_scan(data, scan_start, sos, frame, qtables, htables,
                 break
         if mcu < n_mcu:
             raise ValueError("JPEG entropy data truncated (missing MCUs)")
-
-    def assemble(ci: int) -> np.ndarray:
-        """Component ci's coefficient blocks → its plane at frame
-        resolution: dequant + IDCT, MCU-grid assembly, crop to the
-        component's own dims (ceil(dim·sampling/max)), then integer-ratio
-        pixel-replication upsample to (h, w)."""
-        comp = comps[ci]
-        q = qtables.get(comp["tq"])
-        if q is None:
-            raise ValueError("missing quantization table")
-        blocks = np.asarray(outs[ci], dtype=np.int64).reshape(-1, 8, 8)
-        pix = _idct_blocks(blocks * q)
-        cv, ch = comp["v"], comp["h"]
-        plane = pix.reshape(mcuy, mcux, cv, ch, 8, 8) \
-            .transpose(0, 2, 4, 1, 3, 5) \
-            .reshape(mcuy * cv * 8, mcux * ch * 8)
-        comp_h = -(-h * cv // vmax)
-        comp_w = -(-w * ch // hmax)
-        plane = plane[:comp_h, :comp_w]
-        ry, rx = vmax // cv, hmax // ch
-        if ry * cv != vmax or rx * ch != hmax:
-            raise ValueError(
-                f"non-integer chroma sampling ratio {cv}x{ch} vs "
-                f"{vmax}x{hmax}")
-        if ry > 1 or rx > 1:
-            plane = plane.repeat(ry, axis=0).repeat(rx, axis=1)
-        return np.ascontiguousarray(plane[:h, :w])
-
-    if not color:
-        return assemble(0)
-    return [assemble(ci) for ci in range(len(comps))]
+    return outs
 
 
-# Segments below this use the original scalar bit-cursor loop (kept as the
-# semantics reference); everything bigger takes the word-peek loop.
+def _assemble_plane(frame, comp, blocks, qtables) -> np.ndarray:
+    """One component's natural-order coefficient blocks, in MCU order →
+    its plane at frame resolution: dequant + IDCT, MCU-grid assembly,
+    crop to the component's own dims (ceil(dim·sampling/max)), then
+    integer-ratio pixel-replication upsample to (h, w)."""
+    q = qtables.get(comp["tq"])
+    if q is None:
+        raise ValueError("missing quantization table")
+    pix = _idct_blocks(np.asarray(blocks, dtype=np.int64).reshape(-1, 8, 8)
+                       * q)
+    w, h, hmax, vmax = frame["w"], frame["h"], frame["hmax"], frame["vmax"]
+    mcux, mcuy = frame["mcux"], frame["mcuy"]
+    cv, ch = comp["v"], comp["h"]
+    plane = pix.reshape(mcuy, mcux, cv, ch, 8, 8) \
+        .transpose(0, 2, 4, 1, 3, 5) \
+        .reshape(mcuy * cv * 8, mcux * ch * 8)
+    plane = plane[:-(-h * cv // vmax), :-(-w * ch // hmax)]
+    ry, rx = vmax // cv, hmax // ch
+    if ry * cv != vmax or rx * ch != hmax:
+        raise ValueError(
+            f"non-integer chroma sampling ratio {cv}x{ch} vs "
+            f"{vmax}x{hmax}")
+    if ry > 1 or rx > 1:
+        plane = plane.repeat(ry, axis=0).repeat(rx, axis=1)
+    return np.ascontiguousarray(plane[:h, :w])
+
+
 # Minimum restart-segment lane count for the numpy lockstep decoder: the
 # per-step numpy kernel overhead (~2 µs/op regardless of width) amortizes
 # over the lanes, so the vector path only wins when enough segments run
 # in parallel. Measured crossover on this host class is ~150 lanes;
-# 192 leaves margin. Streams without (enough) restart markers take the
-# scalar word-peek loop unchanged.
+# 192 leaves margin. Streams without (enough) restart markers decode
+# segment by segment (``_decode_mcus``).
 _VECTOR_MIN_LANES = 192
 
 
@@ -589,6 +640,8 @@ def _decode_mcus_vector(segments: list[bytes], plan_np,
     return out
 
 
+# Segments below this use the scalar bit-cursor loop (also the semantics
+# reference); everything bigger takes the word-peek loop.
 _WORDS_MIN_BYTES = 1024
 # Zero padding past the segment end for the word array. Must cover one
 # worst-case MCU of overrun before the per-MCU truncation check fires:

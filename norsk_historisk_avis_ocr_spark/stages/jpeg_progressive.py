@@ -1,8 +1,10 @@
-"""Progressive (SOF2) JPEG — gray + color decode, encoder test generators.
+"""Progressive (SOF2) JPEG — scan decoder and encoder test generators.
 
 Web images and library-digitized scans are routinely progressive; the
-reference gets them free from PIL/libjpeg. The baseline module
-(``stages/jpeg.py``) dispatches SOF2 here; both grayscale and
+reference gets them free from PIL/libjpeg. The frame reader in
+``stages/jpeg.py`` parses the headers of both codings and hands every
+scan of a progressive frame to :func:`_decode_scan_progressive`, which
+refines one coefficient store per component. Grayscale and
 3-component YCbCr color are decoded for real:
 
 - DC scans — interleaved (MCU order, per-component predictors) or
@@ -11,15 +13,16 @@ reference gets them free from PIL/libjpeg. The baseline module
   correction bit per block);
 - AC scans (always single-component per T.81 B.2.3) over a spectral
   band ``Ss..Se``, traversing that component's OWN unpadded block grid
-  (mapped into the MCU-padded coefficient store): first pass with
-  EOB-run coding, refinement passes with the §G.1.2.3 correction-bit
-  protocol (newly-significant coefficients interleaved with
-  history-coefficient refinements);
-- restart markers (DC predictors and the EOB run reset per interval);
-- chroma upsample + PIL-exact luma exactly as the baseline color path.
+  (mapped into the MCU-order coefficient store by :func:`_mcu_rows`):
+  first pass with EOB-run coding, refinement passes with the §G.1.2.3
+  correction-bit protocol (newly-significant coefficients interleaved
+  with history-coefficient refinements);
+- restart markers (DC predictors and the EOB run reset per interval).
 
-Everything else non-baseline (arithmetic, 12-bit, hierarchical, 2/4
-components) is rejected loudly.
+The store holds blocks in the baseline scan decoder's order, so both
+codings share one plane assembler (dequant, IDCT, chroma upsample) and
+one RGB/luma conversion in ``stages/jpeg.py``. 2- and 4-component
+progressive frames are rejected loudly.
 
 Exactness: the companion encoders (:func:`encode_jpeg_progressive`,
 :func:`encode_jpeg_progressive_color`) emit multi-scan scripts from the
@@ -35,9 +38,8 @@ import struct
 import numpy as np
 
 from .jpeg import (
-    _DC_BITS, _DC_VALS, _PeekTable, _ZZ_COLS, _ZZ_ROWS, _ac_table_spec,
-    _BitWriter, _canonical_codes, _destuff, _idct_blocks, _pad_edge,
-    _quant_table, _quantized_zigzag, _seg,
+    _DC_BITS, _DC_VALS, _ac_table_spec, _BitWriter, _canonical_codes,
+    _pad_edge, _quant_table, _quantized_zigzag, _seg,
 )
 
 
@@ -61,8 +63,11 @@ def _fused_ac_first(t) -> list[int]:
     else -1 (fall through to the two-step path: EOBn, ZRL, long codes).
     One list lookup replaces lookup + second refill-check + magnitude
     extract + sign-extend per coefficient. Built vectorized from the
-    peek table and cached on the table object (same tables recur across
-    pages of a corpus)."""
+    peek table and cached on the table object. The frame reader builds a
+    new ``_PeekTable`` for every DHT segment of every page, so the cache
+    serves the AC-first scans of one page only, not the pages of a
+    corpus; a cross-page table cache would save the table builds
+    (~2.5 ms per DC+AC table pair on a 4-core x86 host)."""
     f = getattr(t, "_fused_prog", None)
     if f is None:
         e = np.asarray(t.entry, dtype=np.int64)
@@ -98,6 +103,18 @@ def _comp_block_order(w: int, h: int, cv: int, ch: int, vmax: int,
     return [r * pwb + c for r in range(cby) for c in range(cbx)]
 
 
+def _mcu_rows(cv: int, ch: int, mcuy: int, mcux: int) -> np.ndarray:
+    """Index table of one component: raster index ``by * mcux*ch + bx``
+    on its MCU-padded block grid → that block's row in MCU order (MCUs
+    in raster order, the component's cv×ch blocks inside each), the order
+    in which the baseline scan decoder emits blocks and the plane
+    assembler reads them."""
+    by = np.arange(mcuy * cv)[:, None]
+    bx = np.arange(mcux * ch)[None, :]
+    return (((by // cv) * mcux + bx // ch) * (cv * ch)
+            + (by % cv) * ch + bx % ch).ravel()
+
+
 def _write_dc_diff(bw: "_BitWriter", diff: int, dc_codes: dict) -> None:
     """Entropy-code one DC difference (shared by both progressive
     encoders' DC-first scans)."""
@@ -108,175 +125,23 @@ def _write_dc_diff(bw: "_BitWriter", diff: int, dc_codes: dict) -> None:
         bw.write(diff if diff > 0 else diff + (1 << size) - 1, size)
 
 
-def decode_progressive_gray(data: bytes) -> np.ndarray:
-    """Progressive JPEG bytes → (H, W) uint8 grayscale. Single-component
-    streams decode the plane directly; 3-component YCbCr streams convert
-    through RGB with the PIL-exact luma (same contract as the baseline
-    entry point). Raises ``ValueError`` for anything outside the
-    supported class (missing scans, truncated/corrupt entropy data)."""
-    planes = _decode_progressive(data)
-    if len(planes) == 1:
-        return planes[0]
-    from .jpeg import _ycc_to_rgb
-    from .png import to_grayscale
-    return to_grayscale(_ycc_to_rgb(*planes))
-
-
-def decode_progressive_rgb(data: bytes) -> np.ndarray:
-    """Progressive 3-component YCbCr JPEG bytes → (H, W, 3) uint8 RGB."""
-    planes = _decode_progressive(data)
-    if len(planes) != 3:
-        raise ValueError("not a 3-component color JPEG")
-    from .jpeg import _ycc_to_rgb
-    return _ycc_to_rgb(*planes)
-
-
-def _decode_progressive(data: bytes) -> list[np.ndarray]:
-    """Marker walk + scan accumulation → per-component planes at frame
-    resolution (chroma pixel-replication upsampled, as in the baseline
-    color path)."""
-    if not data.startswith(b"\xff\xd8"):
-        raise ValueError("not a JPEG (bad SOI)")
-    pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    htables: dict[tuple[int, int], _PeekTable] = {}
-    frame = None
-    restart_interval = 0
-    coefs: list[np.ndarray] | None = None
-    saw_scan = False
-    n = len(data)
-    while pos + 4 <= n:
-        if data[pos] != 0xFF:
-            raise ValueError("marker expected")
-        marker = data[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        (seglen,) = struct.unpack(">H", data[pos + 2:pos + 4])
-        body = data[pos + 4:pos + 2 + seglen]
-        if len(body) != seglen - 2:
-            raise ValueError("truncated JPEG segment")
-        if marker == 0xDB:
-            j = 0
-            while j < len(body):
-                pq, tq = body[j] >> 4, body[j] & 15
-                j += 1
-                if pq == 0:
-                    vals = np.frombuffer(body[j:j + 64], dtype=np.uint8)
-                    j += 64
-                else:
-                    vals = np.frombuffer(body[j:j + 128],
-                                         dtype=">u2").astype(np.int64)
-                    j += 128
-                t = np.zeros((8, 8), dtype=np.int64)
-                t[_ZZ_ROWS, _ZZ_COLS] = vals
-                qtables[tq] = t
-        elif marker == 0xC4:
-            j = 0
-            while j < len(body):
-                tc, th = body[j] >> 4, body[j] & 15
-                bits = list(body[j + 1:j + 17])
-                nv = sum(bits)
-                vals = list(body[j + 17:j + 17 + nv])
-                htables[(tc, th)] = _PeekTable(bits, vals)
-                j += 17 + nv
-        elif marker == 0xC2:  # SOF2 progressive
-            precision = body[0]
-            if precision != 8:
-                raise ValueError(f"unsupported JPEG precision {precision}")
-            h, w = struct.unpack(">HH", body[1:5])
-            ncomp = body[5]
-            if ncomp not in (1, 3):
-                raise ValueError(
-                    f"unsupported progressive component count {ncomp}")
-            if w == 0 or h == 0:
-                raise ValueError("empty JPEG frame")
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq = body[6 + 3 * c:9 + 3 * c]
-                ch, cv = hv >> 4, hv & 15
-                if not (1 <= ch <= 4 and 1 <= cv <= 4):
-                    raise ValueError(f"bad sampling factors {ch}x{cv}")
-                comps.append({"id": cid, "h": ch, "v": cv, "tq": tq})
-            hmax = max(c["h"] for c in comps)
-            vmax = max(c["v"] for c in comps)
-            if comps[0]["h"] != hmax or comps[0]["v"] != vmax:
-                raise ValueError("first component is not max-sampled")
-            mcux = -(-w // (8 * hmax))
-            mcuy = -(-h // (8 * vmax))
-            frame = {"w": w, "h": h, "comps": comps, "hmax": hmax,
-                     "vmax": vmax, "mcux": mcux, "mcuy": mcuy}
-            # per-comp coefficient store on the MCU-PADDED block grid,
-            # zigzag order (interleaved DC scans address this grid;
-            # non-interleaved scans address the comp's own grid, mapped
-            # into it — T.81 A.2.2 vs A.2.3)
-            coefs = [np.zeros((mcuy * c["v"] * mcux * c["h"], 64),
-                              dtype=np.int32) for c in comps]
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("mixed/unsupported SOF in progressive stream")
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:
-            if frame is None:
-                raise ValueError("SOS before SOF")
-            pos = _decode_scan_progressive(
-                data, pos + 2 + seglen, body, frame, htables,
-                restart_interval, coefs)
-            saw_scan = True
-            continue  # pos already advanced past the scan's entropy data
-        pos += 2 + seglen
-
-    if frame is None or coefs is None:
-        raise ValueError("no SOF2 frame")
-    if not saw_scan:
-        # headers alone would "decode" to a uniform gray plane — silent
-        # garbage; same contract as the baseline "no SOS marker" raise
-        raise ValueError("no SOS marker (no image data)")
-
-    w, h = frame["w"], frame["h"]
-    hmax, vmax = frame["hmax"], frame["vmax"]
-    mcux, mcuy = frame["mcux"], frame["mcuy"]
-    planes = []
-    for ci, comp in enumerate(frame["comps"]):
-        q = qtables.get(comp["tq"])
-        if q is None:
-            raise ValueError("missing quantization table")
-        coef = coefs[ci]
-        natural = np.zeros_like(coef)
-        natural[:, _ZZ_ROWS.astype(np.int64) * 8 + _ZZ_COLS] = coef
-        pix = _idct_blocks(natural.astype(np.int64).reshape(-1, 8, 8) * q)
-        cv, ch = comp["v"], comp["h"]
-        pwb = mcux * ch
-        plane = pix.reshape(-1, pwb, 8, 8).transpose(0, 2, 1, 3) \
-            .reshape(mcuy * cv * 8, pwb * 8)
-        comp_h = -(-h * cv // vmax)
-        comp_w = -(-w * ch // hmax)
-        plane = plane[:comp_h, :comp_w]
-        ry, rx = vmax // cv, hmax // ch
-        if ry * cv != vmax or rx * ch != hmax:
-            raise ValueError("non-integer chroma sampling ratio")
-        if ry > 1 or rx > 1:
-            plane = plane.repeat(ry, axis=0).repeat(rx, axis=1)
-        planes.append(np.ascontiguousarray(plane[:h, :w]))
-    return planes
-
-
-def _decode_scan_progressive(data, scan_start, sos, frame, htables,
-                             restart_interval, coefs) -> int:
+def _decode_scan_progressive(segments, scan, frame, htables,
+                             restart_interval, coefs) -> None:
+    """One progressive scan (``segments`` destuffed, ``scan`` as parsed
+    by ``jpeg._read_sos``) refined into ``coefs``: per component, zigzag-
+    order rows in MCU order — the block order the baseline scan decoder
+    emits, so both feed ``jpeg._assemble_plane`` unchanged."""
     comps = frame["comps"]
-    ns = sos[0]
+    sel, ss, se, ah, al = scan
+    ns = len(sel)
     if not 1 <= ns <= len(comps):
         raise ValueError("bad progressive scan component count")
     scan_comps = []
-    for i in range(ns):
-        cs, tables = sos[1 + 2 * i], sos[2 + 2 * i]
+    for cs, dsel, asel in sel:
         ci = next((j for j, c in enumerate(comps) if c["id"] == cs), None)
         if ci is None:
             raise ValueError("SOS selector missing frame component")
-        scan_comps.append((ci, tables >> 4, tables & 15))
-    off = 1 + 2 * ns
-    ss, se, aa = sos[off], sos[off + 1], sos[off + 2]
-    ah, al = aa >> 4, aa & 15
+        scan_comps.append((ci, dsel, asel))
     if not (0 <= ss <= se <= 63):
         raise ValueError("bad spectral selection")
     if ss == 0 and se != 0:
@@ -285,33 +150,23 @@ def _decode_scan_progressive(data, scan_start, sos, frame, htables,
         raise ValueError("interleaved AC scan is illegal (T.81 B.2.3)")
 
     mcux, mcuy = frame["mcux"], frame["mcuy"]
-    hmax, vmax = frame["hmax"], frame["vmax"]
-
-    def comp_order(ci: int) -> list[int]:
-        comp = comps[ci]
-        return _comp_block_order(frame["w"], frame["h"], comp["v"],
-                                 comp["h"], vmax, hmax, mcux)
-
-    segments, end = _destuff(data, scan_start)
-
     if ss == 0 and ns > 1:
-        # interleaved DC scan: MCU units, per-comp v*h blocks each
-        units = []
-        for my in range(mcuy):
-            for mx in range(mcux):
-                unit = []
-                for ci, dsel, _ in scan_comps:
-                    comp = comps[ci]
-                    cv, ch = comp["v"], comp["h"]
-                    pwb = mcux * ch
-                    for iy in range(cv):
-                        for ix in range(ch):
-                            unit.append(
-                                (ci, (my * cv + iy) * pwb + mx * ch + ix))
-                units.append(unit)
+        # interleaved DC scan: MCU units, each component's v*h blocks in
+        # turn — consecutive rows of the MCU-order store
+        nbs = [(ci, comps[ci]["v"] * comps[ci]["h"])
+               for ci, _, _ in scan_comps]
+        units = [[(ci, m * nb + b) for ci, nb in nbs for b in range(nb)]
+                 for m in range(mcux * mcuy)]
     else:
+        # the component's own block grid, in raster order, addressed
+        # into the MCU-order store through the index table
         ci0 = scan_comps[0][0]
-        units = [[(ci0, row)] for row in comp_order(ci0)]
+        comp = comps[ci0]
+        order = _comp_block_order(frame["w"], frame["h"], comp["v"],
+                                  comp["h"], frame["vmax"], frame["hmax"],
+                                  mcux)
+        rows = _mcu_rows(comp["v"], comp["h"], mcuy, mcux)[order]
+        units = [[(ci0, row)] for row in rows.tolist()]
     n_units = len(units)
 
     dc_tables = {}
@@ -637,7 +492,6 @@ def _decode_scan_progressive(data, scan_start, sos, frame, htables,
             break
     if unit < n_units:
         raise ValueError("progressive scan ended early")
-    return end
 
 
 # --- encoder (test generator) ----------------------------------------------

@@ -132,6 +132,53 @@ def test_sos_component_mismatch_is_valueerror():
     assert meta["width"] >= 256 and len(meta["features"]) == 16
 
 
+def _header_segments(data):
+    """(offset, marker, length) of every marker segment before EOI,
+    skipping each scan's entropy-coded data."""
+    segs, pos = [], 2
+    while data[pos + 1] != 0xD9:
+        marker = data[pos + 1]
+        (length,) = struct.unpack(">H", data[pos + 2:pos + 4])
+        segs.append((pos, marker, length))
+        pos += 2 + length
+        if marker == 0xDA:  # entropy data runs to the next non-RST marker
+            while not (data[pos] == 0xFF
+                       and data[pos + 1] not in (0x00, *range(0xD0, 0xD8))):
+                pos += 1
+    return segs
+
+
+def test_hostile_header_lengths_raise_valueerror():
+    """Every header segment (DQT, DHT, SOF0/SOF2, DRI, SOS) with its
+    length field shrunk to each value from 2 up to its real length must
+    raise ValueError — the quarantine contract — not the IndexError or
+    struct.error of indexing a segment shorter than its content."""
+    from norsk_historisk_avis_ocr_spark.stages.jpeg import encode_jpeg_color
+    from norsk_historisk_avis_ocr_spark.stages.jpeg_progressive import (
+        encode_jpeg_progressive,
+    )
+    img = _gradient(16, 16)
+    prog = encode_jpeg_progressive(img, quality=90)
+    streams = {
+        "gray": encode_jpeg_gray(img, quality=90, restart_interval=1),
+        "color": encode_jpeg_color(np.dstack([img, img[::-1], img.T]),
+                                   quality=90, restart_interval=1),
+        # a DRI of 0 (no restarts) so the progressive walk meets one too
+        "progressive": prog[:2] + b"\xff\xdd\x00\x04\x00\x00" + prog[2:],
+    }
+    for name, data in streams.items():
+        decode_jpeg_gray(data)  # the intact stream decodes
+        segs = _header_segments(data)
+        assert {m for _, m, _ in segs} >= {0xDB, 0xC4, 0xDD, 0xDA}, name
+        for pos, marker, length in segs:
+            for short in range(2, length):
+                hostile = (data[:pos + 2] + struct.pack(">H", short)
+                           + data[pos + 4:])
+                with pytest.raises(ValueError):
+                    decode_jpeg_gray(hostile)
+                    pytest.fail(f"{name}: {marker:#x} length {short}")
+
+
 def test_jpeg_roundtrip_properties_hypothesis():
     """Property fuzz across shapes/qualities/restart intervals: decode
     never crashes on our own encoder's output, preserves shape, and at
@@ -177,7 +224,7 @@ def test_jpeg_corrupt_bytes_never_silent_hypothesis():
             # a flipped bit may land in the SOF dims — any well-formed
             # 2-D result is fine; the contract is no silent crash
             assert out.ndim == 2 and out.size > 0
-        except (ValueError, struct.error, IndexError):
+        except ValueError:
             pass  # the exceptions decode_media quarantines
 
     prop()
@@ -307,7 +354,7 @@ def test_jpeg_corrupt_bytes_never_silent_word_path(monkeypatch):
             # a flipped bit may land in the SOF dims — any well-formed
             # 2-D result is fine; the contract is no silent crash
             assert out.ndim == 2 and out.size > 0
-        except (ValueError, struct.error, IndexError):
+        except ValueError:
             pass  # the exceptions decode_media quarantines
 
     prop()
@@ -488,7 +535,7 @@ def test_jpeg_corrupt_bytes_never_silent_vector_path(monkeypatch):
         try:
             out = decode_jpeg_gray(bytes(data))
             assert out.ndim == 2 and out.size > 0
-        except (ValueError, struct.error, IndexError):
+        except ValueError:
             pass  # the exceptions decode_media quarantines
 
     prop()

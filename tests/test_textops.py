@@ -214,14 +214,16 @@ def test_readable_diff_still_matches_reference_on_normalizer_shapes(texts):
         .get_opcodes()
 
 
+# the regex form of the short-line counter in functions/udfs.py:extract_one
+_SHORT_LINE = re.compile(r"^\s*\S{1,2}\s*$")
+
+
 @settings(max_examples=300, deadline=None)
 @given(st.text(alphabet=st.sampled_from(list("ab -|.\n\t\r\xa0«")), max_size=60))
 def test_metrics_counter_fast_forms_match_regexes(text):
     """The C-speed metric counters in functions/udfs.py must equal the
     original regex definitions on arbitrary text (r6 optimization)."""
-    from norsk_historisk_avis_ocr_spark.functions.udfs import (
-        _HYPHEN_BREAK, _SHORT_LINE,
-    )
+    from norsk_historisk_avis_ocr_spark.stages.textops import _HYPHEN_BREAK
     for ln in text.split("\n"):
         assert bool(_SHORT_LINE.match(ln)) == (0 < len(ln.strip()) <= 2), ln
     assert len(_HYPHEN_BREAK.findall(text)) == text.count("-\n")
